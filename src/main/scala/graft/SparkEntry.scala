@@ -1722,10 +1722,12 @@ object SparkEntry {
         .orderBy("user_id")
     }),
     "q_outliers_iqr" -> ((s, dir) =>
-      // Tukey-fence outlier audit per returnflag: slim quantile agg
-      // broadcast back + one conditional agg — the fact table never
-      // sorts globally (see Outliers; fences rounded to 4 digits in
-      // BOTH engines so the flag compares a contract value)
+      // Tukey-fence outlier audit per returnflag: lineitem is scanned
+      // once at build time into a pinned (flag, price) projection; a
+      // slim quantile agg broadcast back + one conditional agg read the
+      // pin — the fact table never sorts globally (see Outliers; fences
+      // rounded to 4 digits in BOTH engines so the flag compares a
+      // contract value)
       graft.operators.quantile.Outliers
         .iqrAudit(snap(s, dir).lineitem, "l_returnflag", "l_extendedprice")
         .orderBy("l_returnflag")),

@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
   * trusting a numeric column (the distribution-shaped sibling of
   * `q_null_audit`'s presence checks).
   *
-  * Two aggregation passes over the fact table: one slim per-group
-  * quantile agg (group-cardinality rows, broadcast back), one
-  * conditional agg against the fences — the fact table is never
-  * sorted globally and never shuffled wider than its group key.
+  * One scan of the fact table, at DataFrame build time, into a pinned
+  * (group, value) projection; two aggregation passes read the pin: one
+  * slim per-group quantile agg (group-cardinality rows, broadcast
+  * back), one conditional agg against the fences — the fact table is
+  * never sorted globally and never shuffled wider than its group key.
   *
   * Determinism: fences are ROUNDED to 4 digits and the flag compares
   * against the rounded fence in every engine (SURVEY §5 — the rounded
