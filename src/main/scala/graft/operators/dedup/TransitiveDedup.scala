@@ -3,6 +3,8 @@ package graft.operators.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallInput
+
 /** Connected components over duplicate-pair edges, for transitive dedup
   * clusters (A~B, B~C ⇒ {A,B,C} one cluster even without an A~C edge).
   *
@@ -35,29 +37,20 @@ import org.apache.spark.sql.functions._
   * retry-from-scratch is unacceptable, swap in a reliable
   * `sparkContext.setCheckpointDir` + `.checkpoint()` (HDFS/S3-backed) or
   * `persist(MEMORY_AND_DISK_2)` at ~2× the per-round I/O cost.
+  *
+  * Small-graph degrade: when the canonical edge set holds at most
+  * `SmallInput.threshold` rows (the [[graft.operators.SmallInput]] gate,
+  * conf `spark.graft.smallInputRows`, clamped at its hard cap), ONE
+  * bounded probe collects it and a driver-side union-find replaces the
+  * star loop, whose several fixed jobs per round (two shuffles +
+  * checkpoints + the convergence count) dominate whenever the
+  * deduplicated edge table is small — the common case for near-dup pair
+  * sets. Min-root union-find produces EXACTLY the star fixpoint's labels
+  * (component = the component's minimum id, compared with Spark's own
+  * ordering). Conf 0 forces the distributed loop (the O(log n)-round
+  * plan pins do).
   */
 object TransitiveDedup {
-
-  /** Edge-count threshold below which [[components]] degrades to a
-    * driver-side union-find over the COUNTED canonical edge set (the
-    * RankedSpine/TopKPerKey auto-degrade pattern): the star loop costs
-    * several fixed jobs per round (two shuffles + checkpoints + the
-    * convergence count), which dominates whenever the deduplicated edge
-    * table is small — the common case for near-dup pair sets. The edge
-    * table is already distinct+checkpointed when counted, so the
-    * collect is bounded by construction (≤ threshold slim pairs), and
-    * min-root union-find produces EXACTLY the star fixpoint's labels
-    * (component = the component's minimum id, compared with Spark's own
-    * ordering — strings by UTF-8 binary, not Java UTF-16). Set 0 to
-    * force the distributed loop (the O(log n)-round plan pins do).
-    * The effective threshold is clamped at [[SmallEdgesHardCap]]
-    * (ADVICE r15): a caller raising the conf to tens of millions would
-    * otherwise get a driver collect + a LocalRelation of up to 2× that
-    * many rows (driver OOM) instead of the distributed loop.
-    */
-  val SmallEdgesConf = "spark.graft.components.smallEdges"
-  val SmallEdgesDefault = 200000L
-  val SmallEdgesHardCap = 5000000L
 
   /** (id, component) for every id appearing in `pairs` (id_a/id_b). */
   def components(pairs: DataFrame, maxIter: Int = 30): DataFrame =
@@ -81,16 +74,11 @@ object TransitiveDedup {
       .distinct()
       .localCheckpoint(true)
 
-    // small-graph auto-degrade (see SmallEdgesConf): the canonical edge
-    // set is pinned, so the count is cheap and the collect is bounded.
-    // The user-settable conf is clamped at the hard cap — the degrade
-    // exists to dodge fixed per-round job costs on SMALL graphs, and an
-    // uncapped conf would turn it into an unbounded driver collect.
-    val threshold = math.min(
-      pairs.sparkSession.conf.get(SmallEdgesConf, SmallEdgesDefault.toString).toLong,
-      SmallEdgesHardCap)
-    if (threshold > 0 && edges.count() <= threshold)
-      return (smallComponents(nodes, edges), 0)
+    // small-graph degrade: one bounded take of the pinned edge set
+    SmallInput.take(edges) match {
+      case Some(rows) => return (smallComponents(nodes, rows), 0)
+      case None => ()
+    }
 
     def neighborhoods(es: DataFrame): DataFrame = {
       val nbrs = es.unionAll(es.select(col("v").as("u"), col("u").as("v")))
@@ -149,31 +137,25 @@ object TransitiveDedup {
 
   /** The degraded small-graph path: min-root union-find over the
     * collected canonical edges — labels are BIT-IDENTICAL to the star
-    * fixpoint's (component = minimum id under Spark's ordering; strings
-    * compare as UTF-8 bytes via UTF8String, which differs from Java's
-    * UTF-16 order for BMP-above-surrogate vs supplementary code points
-    * — spec-pinned). Ids must be orderable atomics (the Quantiles
-    * rule); decimal ids are normalized via stripTrailingZeros before
-    * HashMap use (ADVICE r15 — BigDecimal.equals is scale-sensitive:
+    * fixpoint's (component = minimum id under Spark's ordering, via
+    * `SmallInput.compare`: strings compare as UTF-8 bytes, which differs
+    * from Java's UTF-16 order for BMP-above-surrogate vs supplementary
+    * code points — spec-pinned). Ids must be orderable atomics (the
+    * Quantiles rule); decimal ids are normalized via stripTrailingZeros
+    * before HashMap use (BigDecimal.equals is scale-sensitive:
     * 1.0 != 1.00 as map keys even though compareTo says equal; one
     * Spark column carries one scale, but the normalization makes the
     * key identity independent of that assumption; emitted labels are
     * re-scaled back to the column type by createDataFrame's converter).
     */
-  private def smallComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  private def smallComponents(nodes: DataFrame, rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructField, StructType}
-    val idType = edges.schema("u").dataType
+    val idType = nodes.schema("id").dataType
     def norm(v: Any): Any = v match {
       case d: java.math.BigDecimal => d.stripTrailingZeros()
       case x => x
     }
-    def key(v: Any): Comparable[Any] = (v match {
-      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-      case c: Comparable[_] => c
-      case other => throw new IllegalArgumentException(
-        s"component ids must be orderable atomics, got ${other.getClass}")
-    }).asInstanceOf[Comparable[Any]]
     val parent = new java.util.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var r = x
@@ -182,12 +164,11 @@ object TransitiveDedup {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = if (n == null) r else n }
       r
     }
-    val rows = edges.collect()
     rows.foreach { e =>
       val (u, v) = (norm(e.get(0)), norm(e.get(1)))
       val (ru, rv) = (find(u), find(v))
       if (ru != rv) {
-        val (root, other) = if (key(ru).compareTo(key(rv)) <= 0) (ru, rv) else (rv, ru)
+        val (root, other) = if (SmallInput.compare(ru, rv) <= 0) (ru, rv) else (rv, ru)
         parent.put(other, root)
         parent.put(root, root)
       }

@@ -1,9 +1,11 @@
 package graft.operators.quantile
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.SmallInput
 
 /** Exact and approximate quantile machinery that survives 100 TB.
   *
@@ -14,6 +16,9 @@ import org.apache.spark.storage.StorageLevel
   *
   *  - [[withNtile]] — exact ntile assignment with no global window:
   *    boundary-then-broadcast over a TeraSort-style range partitioning.
+  *    It, [[withNtileByGroup]] and [[groupPercentilesExact]] share one
+  *    exact-rank core ([[selectRanks]]), whose small-input branch is the
+  *    [[graft.operators.SmallInput]] gate (`spark.graft.smallInputRows`).
   *  - [[approxPercentiles]] — the mergeable bounded-memory scale twin of
   *    the exact `percentile` aggregate (Greenwald-Khanna sketch via
   *    `approx_percentile`), with a rank-error contract.
@@ -24,80 +29,17 @@ import org.apache.spark.storage.StorageLevel
   */
 object Quantiles {
 
-  /** Session conf: row threshold for the SMALL-INPUT DRIVER DEGRADE of
-    * the boundary machinery ([[orderStatisticsBy]], [[withNtileByGroup]],
-    * [[groupPercentilesExact]]). When the slim projection holds at most
-    * this many rows, ONE bounded `limit(threshold+1).collect()` job
-    * replaces the whole sample → range-shuffle → counts-collect →
-    * boundary-fetch chain (3 driver-scheduled jobs and 2–3 evaluations
-    * of the input lineage become 1 job and 1 evaluation), and the
-    * boundaries/percentiles are selected on the driver with a
-    * Spark-identical comparator ([[compareExternal]]) — bit-identical
-    * output both paths (QuantilesSpec/GroupPercentilesSpec pin it).
-    * At scale the probe is harmless: `executeTake` stops after the first
-    * partition(s) exceed threshold+1 rows, so the big path pays one
-    * bounded partial scan, never a full pass. 0 disables the degrade
-    * (the pre-r17 distributed shape, which remains the 100 TB contract).
-    * Driver memory bound: threshold × (2–3 atomic columns).
-    */
-  val SmallInputConf = "spark.graft.quantile.smallInputRows"
-  val SmallInputDefault = 500000L
-
   /** Session conf: cap on the DRIVER-COLLECTED (partition × group) slice
-    * table of the distributed paths ([[groupPercentilesExact]] /
-    * [[withNtileByGroup]]) — the collect is bounded by `limit(cap+1)` and
-    * RAISES when exceeded instead of silently building an unbounded
-    * driver table (group slices are contiguous under the range split, so
-    * the row count is ≤ partitions + groups − 1; a high-cardinality
-    * group column means SMALL groups, where the ordinary per-group
-    * machinery — window ntile, `approxPercentiles` — already scales).
+    * table of the distributed exact-rank core ([[selectRanks]]) — the
+    * collect is bounded by `limit(cap+1)` and RAISES when exceeded
+    * instead of silently building an unbounded driver table (group
+    * slices are contiguous under the range split, so the row count is
+    * ≤ partitions + groups − 1; a high-cardinality group column means
+    * SMALL groups, where the ordinary per-group machinery — window
+    * ntile, `approxPercentiles` — already scales).
     */
   val MaxDriverSlicesConf = "spark.graft.quantile.maxDriverSlices"
   val MaxDriverSlicesDefault = 1000000L
-
-  /** Driver-side mirror of Spark's sort order over COLLECTED
-    * (external-type) non-null column values, for the orderable atomic
-    * types [[checkTypes]] admits. Matches the engine exactly where its
-    * order differs from the JVM natural one:
-    *  - float/double: −0.0 normalizes to 0.0 (SQL treats them equal;
-    *    `java.lang.Double.compare` does not), NaN orders LAST and equal
-    *    to itself (Double.compare's convention == Spark's);
-    *  - strings compare as UNSIGNED UTF-8 BYTES (`UTF8String` order),
-    *    NOT `String.compareTo`'s UTF-16 code units — a supplementary-
-    *    plane character orders ABOVE U+FFFF in byte order but BELOW it
-    *    in UTF-16 (the TransitiveDedup string-order lesson; spec-pinned
-    *    in QuantilesSpec);
-    *  - timestamps via `Timestamp.compareTo` (full nanos precision);
-    *  - everything else (integral numerics, BigDecimal, Date,
-    *    LocalDate/LocalDateTime, Boolean) via its natural Comparable,
-    *    which coincides with the engine's order.
-    */
-  private[graft] def compareExternal(a: Any, b: Any): Int = (a, b) match {
-    case (x: String, y: String) =>
-      val xb = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val yb = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val n = math.min(xb.length, yb.length)
-      var i = 0
-      while (i < n) {
-        val c = java.lang.Integer.compare(xb(i) & 0xff, yb(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      java.lang.Integer.compare(xb.length, yb.length)
-    case (x: java.lang.Double, y: java.lang.Double) =>
-      val xv = x.doubleValue; val yv = y.doubleValue
-      java.lang.Double.compare(
-        if (xv == 0.0d) 0.0d else xv, if (yv == 0.0d) 0.0d else yv)
-    case (x: java.lang.Float, y: java.lang.Float) =>
-      val xv = x.floatValue; val yv = y.floatValue
-      java.lang.Float.compare(
-        if (xv == 0.0f) 0.0f else xv, if (yv == 0.0f) 0.0f else yv)
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
-    case other => throw new IllegalStateException(
-      s"unorderable driver value pair: $other")
-  }
 
   /** Canonicalizes a collected value for use as a driver-side GROUPING
     * key: ±0.0 and every NaN bit pattern collapse exactly as Spark's
@@ -119,30 +61,12 @@ object Quantiles {
     case x => x
   }
 
-  /** Small-input probe (see [[SmallInputConf]]): `Some(rows)` with the
-    * ENTIRE slim projection when it holds ≤ threshold rows, `None`
-    * otherwise — one bounded `executeTake` job either way (the big path
-    * fetches at most threshold+1 rows from the first partition(s) and
-    * stops).
-    */
-  private def takeSmall(slim: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val spark = slim.sparkSession
-    val threshold =
-      spark.conf.get(SmallInputConf, SmallInputDefault.toString).toLong
-    if (threshold <= 0) None
-    else {
-      val cap = math.min(threshold, (Int.MaxValue - 8).toLong).toInt
-      val rows = slim.limit(cap + 1).collect()
-      if (rows.length <= cap) Some(rows) else None
-    }
-  }
-
   /** `Percentile.getPercentile`'s selection + interpolation arithmetic,
-    * shared verbatim by the distributed and driver-degrade paths of
-    * [[groupPercentilesExact]]: position = (N−1)·p, keys at the 0-based
-    * floor/ceil ranks, `(higher − pos)·lowerKey + (pos − lower)·higherKey`
-    * — the SAME JVM double ops as the `percentile()` aggregate, so
-    * outputs are bit-identical to it on either path.
+    * used by [[groupPercentilesExact]] on both branches of the core:
+    * position = (N−1)·p, keys at the 0-based floor/ceil ranks,
+    * `(higher − pos)·lowerKey + (pos − lower)·higherKey` — the SAME JVM
+    * double ops as the `percentile()` aggregate, so outputs are
+    * bit-identical to it.
     */
   private def percentileValues(n: Long, ps: Seq[Double], keyAt: Long => Double): Seq[Double] = {
     val maxPos = (n - 1).toDouble
@@ -188,110 +112,174 @@ object Quantiles {
     orderable(tieCol)
   }
 
+  /** The exact-rank core behind [[orderStatisticsBy]],
+    * [[groupPercentilesExact]] and [[withNtileByGroup]]: the rows at
+    * exact 1-based ranks of each group's ascending order, without a
+    * global sort funnel.
+    *
+    * `slim` holds the group column first when `grouped`, then the order
+    * columns; `names` are the caller's names for the same columns (error
+    * messages). For each group, `ranksOf(total)` returns ranks in
+    * [1, total]; the result is (group, total, the slim rows at those
+    * ranks in the same order) per non-empty group. NULLs in any column
+    * raise.
+    *
+    * Small input ([[graft.operators.SmallInput]]): one bounded probe
+    * collects the whole projection; rows group by [[normGroupKey]] and
+    * sort under the Spark-order driver comparator.
+    *
+    * Distributed:
+    *  1. ONE range split of the slim projection (TeraSort shape: the
+    *     only full-data movement, and it carries the slim columns, not
+    *     whole rows) + `__pid`, persisted so every later job sees the
+    *     SAME split (the range partitioner samples);
+    *  2. ONE bounded (pid, group) count with the null piggyback —
+    *     range partitioning by (group, …) makes group slices
+    *     CONTIGUOUS, so the table is ≤ partitions + groups − 1 rows,
+    *     guarded by [[MaxDriverSlicesConf]];
+    *  3. exclusive prefix offsets per group locate each rank to
+    *     (pid, local rank) on the driver;
+    *  4. ONE `sortWithinPartitions` + linear rank scan over only the
+    *     partitions holding a target fetches those rows — no exchange,
+    *     no window; the pid filter is partition-grain, so retained
+    *     slices stay intact and local ranks are exact.
+    *
+    * Determinism: ranks are exact, so the result is independent of
+    * where the range partitioner split; the two branches return the
+    * same rows.
+    */
+  private def selectRanks(
+      slim: DataFrame,
+      grouped: Boolean,
+      caller: String,
+      names: Seq[String])(ranksOf: Long => Seq[Long]): Seq[(Any, Long, Seq[Row])] = {
+    val cols = slim.columns.toSeq
+    val nullMsg = s"${names.mkString("/")} contain NULLs — filter them before calling " +
+      "(the boundary-broadcast formulation cannot represent null ordering)"
+    SmallInput.take(slim) match {
+      case Some(rows) =>
+        require(!rows.exists(r => cols.indices.exists(r.isNullAt)), nullMsg)
+        val order = if (grouped) cols.indices.tail else cols.indices
+        def before(a: Row, b: Row): Boolean =
+          order.iterator.map(i => SmallInput.compare(a.get(i), b.get(i)))
+            .find(_ != 0).getOrElse(0) < 0
+        rows.groupBy(r => if (grouped) normGroupKey(r.get(0)) else null).toSeq
+          .map { case (g, arr) =>
+            val sorted = arr.sortWith(before)
+            val total = sorted.length.toLong
+            (g, total, ranksOf(total).map(r => sorted((r - 1).toInt): Row))
+          }
+      case None =>
+        val spark = slim.sparkSession
+        val ranged = slim
+          .repartitionByRange(spark.sessionState.conf.numShufflePartitions, cols.map(col): _*)
+          .withColumn("__pid", spark_partition_id())
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          import org.apache.spark.sql.types.{LongType, StructField, StructType}
+          val maxSlices = spark.conf
+            .get(MaxDriverSlicesConf, MaxDriverSlicesDefault.toString).toLong
+          val sliceCap = math.min(maxSlices, (Int.MaxValue - 8).toLong).toInt
+          val counts = ranged
+            .groupBy(col("__pid") +: cols.take(if (grouped) 1 else 0).map(col): _*)
+            .agg(count(lit(1)).as("__c"),
+              sum(when(cols.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L)).as("__nulls"))
+            .limit(sliceCap + 1)
+            .collect()
+          require(counts.length <= sliceCap,
+            s"$caller: (partition × group) slice table exceeds " +
+              s"$MaxDriverSlicesConf=$maxSlices — group cardinality is not " +
+              "driver-modest; use the per-group window (or approxPercentiles) " +
+              "at this cardinality")
+          require(counts.forall(r => r.getLong(r.length - 1) == 0L), nullMsg)
+          // per group: slices in pid (= range) order, exclusive prefix
+          // offsets, each requested rank located to (pid, local rank)
+          val located: Seq[(Any, Long, Seq[(Int, Long)])] = counts
+            .map(r => (r.getInt(0), if (grouped) r.get(1) else null, r.getLong(r.length - 2)))
+            .groupBy(_._2).toSeq
+            .map { case (g, arr) =>
+              val slices = arr.sortBy(_._1)
+              val offs = slices.scanLeft(0L)(_ + _._3)
+              (g, offs.last, ranksOf(offs.last).map { r =>
+                val i = offs.indexWhere(_ >= r) - 1
+                (slices(i)._1, r - offs(i))
+              })
+            }
+          val wanted: Map[Int, Map[Any, Set[Long]]] = located
+            .flatMap { case (g, _, ls) => ls.map { case (p, lr) => (p, g, lr) } }
+            .groupBy(_._1)
+            .map { case (p, xs) =>
+              p -> xs.groupBy(_._2).map { case (g, ys) => g -> ys.map(_._3).toSet }
+            }
+          val bWanted = spark.sparkContext.broadcast(wanted)
+          val pidAt = cols.length
+          val fetched: Map[(Int, Any, Long), Row] = ranged
+            .where(col("__pid").isin(wanted.keys.toSeq: _*))
+            .sortWithinPartitions(cols.map(col): _*)
+            .mapPartitions { it =>
+              val w = bWanted.value
+              var curG: Any = null
+              var started = false
+              var rank = 0L
+              it.flatMap { row =>
+                w.get(row.getInt(pidAt)) match {
+                  case None => Iterator.empty
+                  case Some(byG) =>
+                    val g = if (grouped) row.get(0) else null
+                    if (!started || g != curG) { curG = g; started = true; rank = 1L }
+                    else rank += 1L
+                    if (byG.get(g).exists(_.contains(rank)))
+                      Iterator.single(Row.fromSeq(row.toSeq :+ rank))
+                    else Iterator.empty
+                }
+              }
+            }(Encoders.row(StructType(ranged.schema.fields :+ StructField("__lr", LongType))))
+            .collect()
+            .map(r => ((r.getInt(pidAt), if (grouped) r.get(0) else null, r.getLong(pidAt + 1)), r))
+            .toMap
+          located.map { case (g, total, ls) =>
+            (g, total, ls.map { case (p, lr) => fetched((p, g, lr)) })
+          }
+        } finally { ranged.unpersist(false); () }
+    }
+  }
+
+  /** 1-based ranks of the last row of buckets 1..n−1 of `ntile(n)` over
+    * `total` rows (the first `total % n` buckets get one extra row).
+    * When total < n the trailing ranks repeat the maximum: the boundary
+    * list is a MULTISET whose duplicates are the group maximum, and
+    * nothing orders strictly above it.
+    */
+  private def ntileRanks(total: Long, n: Int): Seq[Long] = {
+    val base = total / n
+    val extra = total % n
+    (1 until n).map(b => b * base + math.min(b.toLong, extra)).filter(_ >= 1L)
+  }
+
   /** Exact order statistics of the composite ordering (valueCol, tieCol)
-    * at 1-based global ranks, computed WITHOUT a global sort funnel:
-    *
-    *  1. range-partition the slim (value, tie) projection (TeraSort
-    *     shape: the only full-data movement, and it carries two columns,
-    *     not whole rows);
-    *  2. per-partition counts → driver (numPartitions longs) → exclusive
-    *     prefix offsets;
-    *  3. each requested global rank lands in exactly one partition at a
-    *     known local rank; only THOSE partitions are sorted (a window
-    *     partitioned by partition id — each task sees one partition's
-    *     rows, never the table).
-    *
-    * `ranksOf` receives the exact total row count (already known from
-    * step 2 — callers never need a separate count() pass) and returns
-    * the ranks to fetch. Returns the (value, tie) pairs in rank order,
-    * in the columns' NATIVE types (usable as comparison literals); ranks
-    * beyond the row count are clamped to the maximum (empty-bucket
-    * degeneracy when n_rows < n_buckets).
-    *
-    * Determinism: ranks are exact, so the result is independent of how
-    * the range partitioner happened to split — the partitioning only has
-    * to be internally consistent, which the persist guarantees.
+    * at 1-based global ranks — the one-group case of [[selectRanks]], so
+    * no global sort funnel. `ranksOf` receives the exact total row count
+    * (known from the core's counts — callers never need a separate
+    * count() pass) and returns the ranks to fetch. Returns the
+    * (value, tie) pairs in rank order, in the columns' NATIVE types
+    * (usable as comparison literals); ranks beyond the row count are
+    * clamped to the maximum (empty-bucket degeneracy when
+    * n_rows < n_buckets).
     */
   def orderStatisticsBy(
       df: DataFrame,
       valueCol: String,
       tieCol: String)(ranksOf: Long => Seq[Long]): Seq[(Any, Any)] = {
     checkTypes(df, valueCol, tieCol)
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     val slim = df.select(col(valueCol).as("__v"), col(tieCol).as("__k"))
-    // r17-opt small-input degrade (guide §2.4 — remove the shuffle and
-    // the 3-job driver chain outright): the whole slim projection fits
-    // under the conf'd threshold, so ONE bounded take replaces sampling +
-    // range shuffle + counts collect + boundary fetch, and the ranks are
-    // selected driver-side under the Spark-identical comparator —
-    // bit-identical boundaries (QuantilesSpec pins degrade vs forced-
-    // distributed on adversarial orderings).
-    takeSmall(slim) match {
-      case Some(rows) =>
-        require(!rows.exists(r => r.isNullAt(0) || r.isNullAt(1)),
-          s"$valueCol/$tieCol contain NULLs — filter them before calling " +
-            "(the boundary-broadcast formulation cannot represent null ordering)")
-        val total = rows.length.toLong
-        require(total > 0, "orderStatistics on an empty input")
+    val sel = selectRanks(slim, grouped = false, "orderStatistics", Seq(valueCol, tieCol)) {
+      total =>
         val ranks = ranksOf(total)
         require(ranks.nonEmpty && ranks.forall(_ >= 1L), s"ranks must be >= 1: $ranks")
-        val clamped = ranks.map(r => math.min(r, total))
-        val sorted = rows.map(r => (r.get(0), r.get(1))).sortWith { (p, q) =>
-          val c = compareExternal(p._1, q._1)
-          (if (c != 0) c else compareExternal(p._2, q._2)) < 0
-        }
-        return clamped.map(r => sorted((r - 1).toInt))
-      case None => ()
+        ranks.map(math.min(_, total))
     }
-    // persisted so the count job and the boundary-fetch job see the SAME
-    // partitioning (the range partitioner samples; two independent
-    // evaluations could split differently)
-    val ranged = slim
-      .repartitionByRange(parts, col("__v"), col("__k"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // null detection piggybacks on the counts job — no extra pass
-      val counts0 = ranged.groupBy("__pid")
-        .agg(count(lit(1)).as("c"),
-          sum(when(col("__v").isNull || col("__k").isNull, 1L).otherwise(0L)).as("nulls"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      require(counts0.map(_._3).sum == 0L,
-        s"$valueCol/$tieCol contain NULLs — filter them before calling " +
-          "(the boundary-broadcast formulation cannot represent null ordering)")
-      val counts = counts0.map(t => t._1 -> t._2)
-      val total = counts.map(_._2).sum
-      require(total > 0, "orderStatistics on an empty input")
-      val ranks = ranksOf(total)
-      require(ranks.nonEmpty && ranks.forall(_ >= 1L), s"ranks must be >= 1: $ranks")
-      val clamped = ranks.map(r => math.min(r, total))
-      // exclusive prefix offsets, in partition-id (= range) order
-      val offsets = counts.scanLeft(0L)(_ + _._2)
-      // rank -> (pid, local rank) via the offsets
-      val located: Seq[(Long, Int, Long)] = clamped.map { r =>
-        val i = counts.indices.find(i => r <= offsets(i) + counts(i)._2).get
-        (r, counts(i)._1, r - offsets(i))
-      }
-      val targetPids = located.map(_._2).distinct
-      val perPid: Map[Int, Seq[Long]] =
-        located.groupBy(_._2).map { case (p, xs) => p -> xs.map(_._3).distinct }
-      val w = Window.partitionBy("__pid").orderBy("__v", "__k")
-      val hit = perPid
-        .map { case (p, lrs) => col("__pid") === p && col("__lr").isin(lrs: _*) }
-        .reduce(_ || _)
-      val fetched = ranged
-        .where(col("__pid").isin(targetPids: _*))
-        .withColumn("__lr", row_number().over(w).cast("long"))
-        .where(hit)
-        .select("__pid", "__lr", "__v", "__k")
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> ((r.get(2), r.get(3))))
-        .toMap
-      located.map { case (_, p, lr) => fetched((p, lr)) }
-    } finally { ranged.unpersist(false); () }
+    require(sel.nonEmpty, "orderStatistics on an empty input")
+    sel.head._3.map(r => (r.get(0), r.get(1)))
   }
 
   /** Fixed-rank convenience form of [[orderStatisticsBy]]. */
@@ -320,17 +308,7 @@ object Quantiles {
       outputCol: String): DataFrame = {
     require(n >= 1, s"ntile buckets must be >= 1, got $n")
     if (n == 1) return df.withColumn(outputCol, lit(1L))
-    // boundary ranks derive from the exact total the counts pass already
-    // produces — no separate count() scan
-    val bounds = orderStatisticsBy(df, valueCol, tieCol) { total =>
-      // ntile sizes: first (total % n) buckets get one extra row
-      val base = total / n
-      val extra = (total % n).toInt
-      (1 until n)
-        .scanLeft(0L) { case (acc, i) => acc + base + (if (i <= extra) 1L else 0L) }
-        .tail
-        .filter(_ >= 1L)
-    }
+    val bounds = orderStatisticsBy(df, valueCol, tieCol)(ntileRanks(_, n))
     val v = col(valueCol)
     val k = col(tieCol)
     val bucket = bounds.foldLeft(lit(1L)) { case (acc, (bv, bk)) =>
@@ -341,24 +319,16 @@ object Quantiles {
 
   /** Exact per-group percentiles — the values the exact `percentile()`
     * aggregate returns, BIT-FOR-BIT, without its per-group value buffer
-    * (optimization guide §2.3/§2.5: the aggregate ships every value of a
-    * group through one exchange into ONE reducer that sorts it — a
-    * 600k-row group at sf0.1 is already a 1.3 s single task and 30+ MiB
-    * of ObjectHashAggregate state for a 3-row result; at 100 TB it is
-    * the canonical single-key funnel).
+    * (the aggregate ships every value of a group through one exchange
+    * into ONE reducer that sorts it — the canonical single-key funnel at
+    * scale).
     *
-    * Plan: the [[orderStatisticsBy]]/[[withNtileByGroup]] machinery —
-    * ONE range shuffle of the slim (group, value) projection (TeraSort
-    * shape, fully distributed), per-(partition, group) counts collected
-    * (group slices are contiguous under the range split, so ≤
-    * partitions + groups − 1 rows), selection ranks located on the
-    * driver, and only the boundary rows fetched via an in-partition
-    * sort + linear rank scan. `Percentile.getPercentile`'s selection and
-    * interpolation arithmetic is replicated on the driver with the SAME
-    * JVM double ops (position = (N−1)·p; keys at floor/ceil of the
-    * position; `(higher − pos)·lowerKey + (pos − lower)·higherKey`), so
-    * outputs are bit-identical — GroupPercentilesSpec pins equality
-    * against the `percentile()` aggregate itself.
+    * Plan: [[selectRanks]] over the slim (group, value) projection
+    * fetches each group's rows at `Percentile.getPercentile`'s selection
+    * ranks (the floor/ceil of position (N−1)·p), and
+    * [[percentileValues]] replicates its interpolation with the SAME JVM
+    * double ops, so outputs are bit-identical — GroupPercentilesSpec
+    * pins equality against the `percentile()` aggregate itself.
     *
     * Contract: `valueCol` numeric, `groupCol` orderable atomic; rows
     * with a NULL group or NULL value are excluded (the aggregate skips
@@ -366,9 +336,8 @@ object Quantiles {
     * `groupBy` would emit — is not produced: callers here never feed
     * null groups, and the range partitioner cannot represent null
     * ordering). Group cardinality must be driver-modest (the result is
-    * a driver-built local table — same contract as
-    * [[withNtileByGroup]]'s boundary table). `nCol` optionally emits the
-    * group's non-null row count (free — job 1 already knows it).
+    * a driver-built local table). `nCol` optionally emits the group's
+    * non-null row count (free — the core already knows it).
     */
   def groupPercentilesExact(
       df: DataFrame,
@@ -381,14 +350,13 @@ object Quantiles {
       s"percentages must be in [0,1], got $ps")
     require(outNames.size == ps.size, "one output name per percentage")
     import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
     df.schema(valueCol).dataType match {
       case _: NumericType => ()
       case other => throw new IllegalArgumentException(
         s"$valueCol must be numeric for percentile interpolation (got $other)")
     }
     checkTypes(df, groupCol, groupCol)
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     val outSchema = StructType(
       StructField(groupCol, df.schema(groupCol).dataType) +:
         (outNames.map(StructField(_, DoubleType)) ++
@@ -396,131 +364,19 @@ object Quantiles {
     val slim = df
       .select(col(groupCol).as("__g"), col(valueCol).as("__v"))
       .where(col("__g").isNotNull && col("__v").isNotNull)
-    // r17-opt small-input degrade (see SmallInputConf): the whole slim
-    // projection in ONE bounded take; per-group sort + the SAME
-    // percentileValues arithmetic driver-side — bit-identical to both
-    // the distributed path and the percentile() aggregate
-    // (GroupPercentilesSpec pins all three)
-    takeSmall(slim) match {
-      case Some(taken) =>
-        import org.apache.spark.sql.Row
-        import scala.jdk.CollectionConverters._
-        if (taken.isEmpty)
-          return df.sparkSession.createDataFrame(
-            java.util.Collections.emptyList[Row](), outSchema)
-        val byG: Seq[(Any, Array[Any])] = taken
-          .groupBy(r => normGroupKey(r.get(0))).toSeq
-          .map { case (gk, arr) =>
-            gk -> arr.map(_.get(1)).sortWith(compareExternal(_, _) < 0)
-          }
-        val outRows: Seq[Row] = byG.map { case (gk, vals) =>
-          val n = vals.length.toLong
-          val outVals = percentileValues(n, ps, r => toDoubleValue(vals(r.toInt)))
-          Row.fromSeq(gk +: (outVals ++ nCol.map(_ => n)))
-        }
-        return spark.createDataFrame(outRows.asJava, outSchema)
-      case None => ()
+    // Percentile's selection ranks (1-based): floor/ceil of (N−1)·p
+    def selection(n: Long): Seq[Long] = ps.flatMap { p =>
+      val pos = (n - 1).toDouble * p
+      Seq(math.floor(pos).toLong + 1L, math.ceil(pos).toLong + 1L)
+    }.distinct
+    val sel = selectRanks(slim, grouped = true, "groupPercentilesExact",
+      Seq(groupCol, valueCol))(selection)
+    val rows: Seq[Row] = sel.map { case (g, n, at) =>
+      val byRank = selection(n).zip(at).toMap
+      val vals = percentileValues(n, ps, r => toDoubleValue(byRank(r + 1L).get(1)))
+      Row.fromSeq(g +: (vals ++ nCol.map(_ => n)))
     }
-    // persisted: counts and the boundary fetch must see the SAME range
-    // split (the partitioner samples — see orderStatisticsBy)
-    val ranged = slim
-      .repartitionByRange(parts, col("__g"), col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      import org.apache.spark.sql.{Encoders, Row}
-      import scala.jdk.CollectionConverters._
-      // job 1: (pid, group) counts, collected (contiguous slices — the
-      // withNtileByGroup driver-size argument). The collect is BOUNDED
-      // (r17, VERDICT r16 item 4): a high-cardinality group column
-      // would otherwise silently build an unbounded driver table — the
-      // limit caps what the driver fetches and the require names the
-      // contract and the scale alternative instead of an OOM.
-      val maxSlices = spark.conf
-        .get(MaxDriverSlicesConf, MaxDriverSlicesDefault.toString).toLong
-      val sliceCap = math.min(maxSlices, (Int.MaxValue - 8).toLong).toInt
-      val counts = ranged.groupBy("__pid", "__g")
-        .agg(count(lit(1)).as("__c"))
-        .limit(sliceCap + 1)
-        .collect()
-      require(counts.length <= sliceCap,
-        s"groupPercentilesExact: (partition × group) slice table exceeds " +
-          s"$MaxDriverSlicesConf=$maxSlices — group cardinality is not " +
-          "driver-modest; use approxPercentiles (B28) or the per-group " +
-          "window at this cardinality")
-      if (counts.isEmpty)
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), outSchema)
-      // per-group slices in pid (= range) order with exclusive prefix
-      // offsets; a 1-based global rank locates to (pid, local rank)
-      val slicesByGroup: Seq[(Any, Seq[(Int, Long, Long)])] = counts
-        .map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-        .groupBy(_._2).toSeq
-        .map { case (g, arr) =>
-          val sorted = arr.sortBy(_._1).toSeq
-          val offs = sorted.scanLeft(0L)(_ + _._3)
-          g -> sorted.zip(offs).map { case ((p, _, c), o) => (p, c, o) }
-        }
-      def locate(slices: Seq[(Int, Long, Long)], r: Long): (Int, Long) = {
-        val (p, _, o) = slices.find(s => r > s._3 && r <= s._3 + s._2).get
-        (p, r - o)
-      }
-      // Percentile's selection ranks: position = (N−1)·p (double);
-      // the keys at 0-based ranks floor(position) and ceil(position)
-      val ranksByGroup: Seq[(Any, Seq[(Int, Long)])] = slicesByGroup.map {
-        case (g, slices) =>
-          val maxPos = (slices.map(_._2).sum - 1).toDouble
-          val oneBased = ps.flatMap { p =>
-            val pos = maxPos * p
-            Seq(math.floor(pos).toLong + 1L, math.ceil(pos).toLong + 1L)
-          }.distinct
-          g -> oneBased.map(locate(slices, _))
-      }
-      val wanted: Map[Int, Map[Any, Set[Long]]] = ranksByGroup
-        .flatMap { case (g, ls) => ls.map { case (p, lr) => (p, g, lr) } }
-        .groupBy(_._1)
-        .map { case (p, xs) =>
-          p -> xs.groupBy(_._2).map { case (g, ys) => g -> ys.map(_._3).toSet }
-        }
-      val bWanted = spark.sparkContext.broadcast(wanted)
-      // job 2: fetch only the selection rows — in-partition sort + one
-      // linear rank scan over only the partitions holding a target (the
-      // pid filter is partition-grain, so retained slices stay intact)
-      val fetchSchema = StructType(ranged.schema.fields :+ StructField("__lr", LongType))
-      val fetched: Map[(Int, Any, Long), Any] = ranged
-        .where(col("__pid").isin(wanted.keys.toSeq: _*))
-        .sortWithinPartitions("__g", "__v")
-        .mapPartitions { it =>
-          val w = bWanted.value
-          var curG: Any = null
-          var started = false
-          var rank = 0L
-          it.flatMap { row =>
-            w.get(row.getInt(2)) match {
-              case None => Iterator.empty
-              case Some(byG) =>
-                val g = row.get(0)
-                if (!started || g != curG) { curG = g; started = true; rank = 1L }
-                else rank += 1L
-                if (byG.get(g).exists(_.contains(rank)))
-                  Iterator.single(Row.fromSeq(row.toSeq :+ rank))
-                else Iterator.empty
-            }
-          }
-        }(Encoders.row(fetchSchema))
-        .collect()
-        .map(r => ((r.getInt(2), r.get(0), r.getLong(3)), r.get(1)))
-        .toMap
-      val rows: Seq[Row] = slicesByGroup.map { case (g, slices) =>
-        val n = slices.map(_._2).sum
-        val vals = percentileValues(n, ps, { r =>
-          val (p, lr) = locate(slices, r + 1L)
-          toDoubleValue(fetched((p, g, lr)))
-        })
-        Row.fromSeq(g +: (vals ++ nCol.map(_ => n)))
-      }
-      spark.createDataFrame(rows.asJava, outSchema)
-    } finally { ranged.unpersist(false); () }
+    df.sparkSession.createDataFrame(rows.asJava, outSchema)
   }
 
   /** Exact `ntile(n) OVER (PARTITION BY groupCol ORDER BY valueCol,
@@ -528,26 +384,10 @@ object Quantiles {
     * for (deciles within each org unit / language) where a plain
     * per-group window still funnels one 4 TB group into one task.
     *
-    * The boundary-broadcast machinery generalizes, in the same THREE
-    * jobs as [[withNtile]] (round 5 — the previous shape paid ~2× in
-    * serialized tiny jobs: two broadcast-plan evaluations, a checkpoint
-    * and a rank-window exchange):
-    *
-    *  1. ONE composite-key range shuffle of the slim (group, value,
-    *     tie) projection, persisted; (partition, group) counts + null
-    *     piggyback collected — range partitioning by (group, …) makes
-    *     group slices CONTIGUOUS, so the count table is at most
-    *     partitions + groups − 1 rows, the same driver-size class as
-    *     [[orderStatisticsBy]]'s per-partition longs;
-    *  2. boundary ranks per group located on the driver (exclusive
-    *     prefix offsets over each group's slices), then fetched with
-    *     `sortWithinPartitions` + a LINEAR per-partition rank scan over
-    *     only the partitions holding a boundary — no exchange, no
-    *     window, ranks read off the already-range-partitioned cache;
-    *  3. each row's bucket assigned MAP-SIDE as `1 + #(group boundaries
-    *     below it)`: the groups×(n−1) boundary rows become a driver-built
-    *     LocalRelation broadcast-joined on the group, with a codegen'd
-    *     higher-order filter over the group's boundary array.
+    * Each group's n−1 boundary rows come from [[selectRanks]] over the
+    * slim (group, value, tie) projection; each row's bucket is then
+    * assigned MAP-SIDE as `1 + #(group boundaries below it)` by
+    * [[assignNtileByBoundaries]].
     *
     * Contract: [[checkTypes]] applies to all three columns (orderable
     * atomic, non-null — nulls rejected, not misbucketed; `tieCol`
@@ -569,146 +409,17 @@ object Quantiles {
     if (n == 1) return df.withColumn(outputCol, lit(1L))
     checkTypes(df, valueCol, tieCol)
     checkTypes(df, groupCol, tieCol)
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     val slim = df.select(col(groupCol).as("__g"), col(valueCol).as("__v"), col(tieCol).as("__k"))
-    // r17-opt small-input degrade (see SmallInputConf): one bounded take,
-    // per-group driver sort under the Spark-identical comparator, then
-    // the SAME assignNtileByBoundaries tail — bit-identical boundaries
-    // (QuantilesSpec pins degrade vs forced-distributed)
-    takeSmall(slim) match {
-      case Some(taken) =>
-        require(taken.nonEmpty, "withNtileByGroup on an empty input")
-        require(!taken.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)),
-          s"$groupCol/$valueCol/$tieCol contain NULLs — filter them before calling " +
-            "(the boundary-broadcast formulation cannot represent null ordering)")
-        val bnds: Seq[(Any, Seq[(Any, Any)])] = taken
-          .groupBy(r => normGroupKey(r.get(0))).toSeq
-          .map { case (gk, arr) =>
-            val sorted = arr.map(r => (r.get(1), r.get(2))).sortWith { (p, q) =>
-              val c = compareExternal(p._1, q._1)
-              (if (c != 0) c else compareExternal(p._2, q._2)) < 0
-            }
-            val tot = sorted.length.toLong
-            val base = tot / n
-            val extra = tot % n
-            gk -> (1 until n).map(b => b * base + math.min(b.toLong, extra))
-              .filter(_ >= 1L)
-              .map(r => sorted((r - 1).toInt))
-          }
-        return assignNtileByBoundaries(df, groupCol, valueCol, tieCol, outputCol, bnds)
-      case None => ()
-    }
-    // persisted: counts, locations and the boundary fetch must all see the
-    // SAME range split (the partitioner samples — see orderStatisticsBy)
-    val ranged = slim
-      .repartitionByRange(parts, col("__g"), col("__v"), col("__k"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      import org.apache.spark.sql.{Encoders, Row}
-      import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
-      import scala.jdk.CollectionConverters._
-      // job 1: (pid, group) counts + null piggyback, collected. Group
-      // slices are CONTIGUOUS under the (group, …) range partitioning,
-      // so this is at most partitions + groups − 1 rows — the same
-      // driver-size class as orderStatisticsBy's per-partition longs
-      // bounded collect (r17, the groupPercentilesExact guard): raise on
-      // non-driver-modest group cardinality instead of silently building
-      // an unbounded driver table
-      val maxSlices = spark.conf
-        .get(MaxDriverSlicesConf, MaxDriverSlicesDefault.toString).toLong
-      val sliceCap = math.min(maxSlices, (Int.MaxValue - 8).toLong).toInt
-      val counts = ranged.groupBy("__pid", "__g")
-        .agg(count(lit(1)).as("__c"),
-          sum(when(col("__g").isNull || col("__v").isNull || col("__k").isNull, 1L)
-            .otherwise(0L)).as("__nulls"))
-        .limit(sliceCap + 1)
-        .collect()
-      require(counts.length <= sliceCap,
-        s"withNtileByGroup: (partition × group) slice table exceeds " +
-          s"$MaxDriverSlicesConf=$maxSlices — group cardinality is not " +
-          "driver-modest; high-cardinality groups should use the plain " +
-          "per-group window ntile (many groups = parallelism)")
-      require(counts.nonEmpty, "withNtileByGroup on an empty input")
-      require(counts.map(_.getLong(3)).sum == 0L,
-        s"$groupCol/$valueCol/$tieCol contain NULLs — filter them before calling " +
-          "(the boundary-broadcast formulation cannot represent null ordering)")
-      // driver: per-group slices in pid (= range) order with exclusive
-      // prefix offsets; boundary ranks b·(tot/n) + min(b, tot%n) for
-      // b=1..n-1 located to (pid, local rank). Duplicate ranks in the
-      // tot<n degenerate case stay duplicated — the boundary list is a
-      // MULTISET whose duplicates are always the group maximum, and
-      // nothing orders strictly above it (same clamping as withNtile)
-      val slicesByGroup: Seq[(Any, Seq[(Int, Long, Long)])] = counts
-        .map(r => (r.getInt(0), r.get(1), r.getLong(2)))
-        .groupBy(_._2).toSeq
-        .map { case (g, arr) =>
-          val sorted = arr.sortBy(_._1).toSeq
-          val offs = sorted.scanLeft(0L)(_ + _._3)
-          g -> sorted.zip(offs).map { case ((p, _, c), o) => (p, c, o) }
-        }
-      val locsByGroup: Seq[(Any, Seq[(Int, Long)])] = slicesByGroup.map {
-        case (g, slices) =>
-          val tot = slices.map(_._2).sum
-          val base = tot / n
-          val extra = tot % n
-          g -> (1 until n).map(b => b * base + math.min(b.toLong, extra))
-            .filter(_ >= 1L)
-            .map { r =>
-              val (p, _, o) = slices.find(s => r > s._3 && r <= s._3 + s._2).get
-              (p, r - o)
-            }
-      }
-      // job 2: fetch the boundary rows with an in-partition sort + one
-      // linear rank scan over only the partitions holding a boundary.
-      // The cache is already range-partitioned, so there is no exchange
-      // and no window; the filter is partition-grain, so every retained
-      // partition's slices stay intact and local ranks are exact
-      val wanted: Map[Int, Map[Any, Set[Long]]] = locsByGroup
-        .flatMap { case (g, ls) => ls.map { case (p, lr) => (p, g, lr) } }
-        .groupBy(_._1)
-        .map { case (p, xs) =>
-          p -> xs.groupBy(_._2).map { case (g, ys) => g -> ys.map(_._3).toSet }
-        }
-      val bWanted = spark.sparkContext.broadcast(wanted)
-      val outSchema = StructType(ranged.schema.fields :+ StructField("__lr", LongType))
-      val fetched: Map[(Int, Any, Long), (Any, Any)] = ranged
-        .where(col("__pid").isin(wanted.keys.toSeq: _*))
-        .sortWithinPartitions("__g", "__v", "__k")
-        .mapPartitions { it =>
-          val w = bWanted.value
-          var curG: Any = null
-          var started = false
-          var rank = 0L
-          it.flatMap { row =>
-            w.get(row.getInt(3)) match {
-              case None => Iterator.empty
-              case Some(byG) =>
-                val g = row.get(0)
-                if (!started || g != curG) { curG = g; started = true; rank = 1L }
-                else rank += 1L
-                if (byG.get(g).exists(_.contains(rank)))
-                  Iterator.single(Row.fromSeq(row.toSeq :+ rank))
-                else Iterator.empty
-            }
-          }
-        }(Encoders.row(outSchema))
-        .collect()
-        .map(r => ((r.getInt(3), r.get(0), r.getLong(4)), (r.get(1), r.get(2))))
-        .toMap
-      // job 3: assign map-side (shared tail — see assignNtileByBoundaries)
-      val bnds: Seq[(Any, Seq[(Any, Any)])] = locsByGroup.map { case (g, ls) =>
-        g -> ls.map { case (p, lr) => fetched((p, g, lr)) }
-      }
-      assignNtileByBoundaries(df, groupCol, valueCol, tieCol, outputCol, bnds)
-    } finally { ranged.unpersist(false); () }
+    val sel = selectRanks(slim, grouped = true, "withNtileByGroup",
+      Seq(groupCol, valueCol, tieCol))(ntileRanks(_, n))
+    require(sel.nonEmpty, "withNtileByGroup on an empty input")
+    assignNtileByBoundaries(df, groupCol, valueCol, tieCol, outputCol,
+      sel.map { case (g, _, at) => g -> at.map(r => (r.get(1), r.get(2))) })
   }
 
-  /** [[withNtileByGroup]]'s map-side assignment tail, shared by the
-    * distributed and driver-degrade paths: the groups×(n−1) boundary
-    * multiset (in rank = ascending (value, tie) order) becomes a
-    * driver-built LocalRelation — broadcasting it launches no cluster
+  /** [[withNtileByGroup]]'s map-side assignment: the groups×(n−1)
+    * boundary multiset (in rank = ascending (value, tie) order) becomes
+    * a driver-built LocalRelation — broadcasting it launches no cluster
     * job — and each row's bucket is `1 + #(group boundaries below it)`.
     */
   private def assignNtileByBoundaries(
@@ -718,7 +429,6 @@ object Quantiles {
       tieCol: String,
       outputCol: String,
       bnds: Seq[(Any, Seq[(Any, Any)])]): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
     import scala.jdk.CollectionConverters._
     val spark = df.sparkSession

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallInput
+
 /** Distributed exclusive prefix sums over an aggregated value spine —
   * the shared primitive behind the doubled-rank statistic family
   * ([[Stats.mannWhitney]], [[Stats.cliffsDelta]],
@@ -50,56 +52,40 @@ import org.apache.spark.sql.functions._
   *    of the groupBy that built the spine — so the within-partition
   *    ordering is total without a tiebreak column.
   *
-  * Small-spine auto-degrade (r14 verdict item 5, the TopKPerKey
-  * auto-degrade precedent): below a few hundred thousand spine rows
-  * the distributed prefix's constant cost (checkpoint + two slim
+  * Small-spine degrade (the [[graft.operators.SmallInput]] gate, conf
+  * `spark.graft.smallInputRows`): below a few hundred thousand spine
+  * rows the distributed prefix's constant cost (checkpoint + two slim
   * shuffles + offset join) exceeds the single-task window it avoids.
-  * So by default the spine cells are `localCheckpoint`-PINNED once
-  * (the spine-aggregate lineage runs a single time) and the pin is
-  * counted: the TOTAL for global spines, the LARGEST PER-GROUP spine
-  * for grouped ones (r16-opt — the wall the degrade guards is one
-  * window task's input, which is one group's rows; the grouped
-  * preflight is one slim group-grain agg over the pin). At or below
-  * `spark.graft.rankedSpine.smallSpineRows` (default 500,000) the
-  * prefix runs as the legacy window over the pin — bounded by the
-  * counted preflight. (Partition-level caveat: a window task's input
-  * is a hash PARTITION, not a group — hash co-location can land
-  * several small groups in one task, so "each task sorts at most
-  * max-per-group rows" holds only up to that co-location. The degrade
-  * is still sound in the many-small-groups regime because the
-  * group-partitioned window parallelizes exactly like the distributed
-  * path's within-partition window — the wall the preflight guards is
-  * one LARGE group serializing a task, which max-per-group does
-  * bound.) Above the threshold the distributed path runs, reading
-  * the pin (which spares `repartitionByRange`'s sampling pass from
-  * re-evaluating the lineage, at the cost of one extra spine
-  * materialization). BOTH paths fold the same exact integral LONGs in
-  * the same per-group spine order, so the choice is bit-invisible
-  * (the §5 determinism argument). ProfileRankedSpine r15 measurements
-  * behind the default (local[32], pin-first): spine 480k auto
-  * 1.00 s vs ranked 1.31 s (win), 1.9M auto 2.34 vs ranked 1.60
-  * (degrading there would LOSE; 500k keeps us out), 3.8M big-path
-  * pin overhead +0.57 s on ranked 2.73 (the r14 shape minus the
-  * sampling re-evaluation, plus the pin write), catalog spines
-  * ≤ 200k win 1.5–2× (q_spearman 4.70 → ~2.7 s, q_cliffs_delta
-  * 1.11 → 0.53 s, q_mann_whitney 1.03 → 0.67 s). Set the conf to 0
-  * to skip the preflight and force the distributed path
-  * unconditionally — the exact pre-r15 shape (the plan-pin specs and
-  * the growth profiler do this; ALSO the right setting at cluster
-  * scale when the spine is known corpus-sized, where pinning the
-  * whole spine before range-splitting it doubles the spine
-  * materializations). The distributed plan stays the documented
-  * contract at scale — the degrade is a bounded local optimization,
-  * never a semantics change.
+  * So by default the spine cells are `localCheckpoint`-PINNED once (the
+  * spine-aggregate lineage runs a single time) and the pin is counted:
+  * the TOTAL for global spines, the LARGEST PER-GROUP spine for grouped
+  * ones (the wall the degrade guards is one window task's input, which
+  * is one group's rows; the grouped preflight is one slim group-grain
+  * agg over the pin). At or below `SmallInput.threshold` the prefix
+  * runs as the window over the pin — bounded by the counted preflight.
+  * (Partition-level caveat: a window task's input is a hash PARTITION,
+  * not a group — hash co-location can land several small groups in one
+  * task, so "each task sorts at most max-per-group rows" holds only up
+  * to that co-location. The degrade is still sound in the
+  * many-small-groups regime because the group-partitioned window
+  * parallelizes exactly like the distributed path's within-partition
+  * window — the wall the preflight guards is one LARGE group
+  * serializing a task, which max-per-group does bound.) Above the
+  * threshold the distributed path runs, reading the pin (which spares
+  * `repartitionByRange`'s sampling pass from re-evaluating the lineage,
+  * at the cost of one extra spine materialization). BOTH paths fold the
+  * same exact integral LONGs in the same per-group spine order, so the
+  * choice is bit-invisible (the §5 determinism argument). The 500k
+  * default sits below the measured crossover (ProfileRankedSpine: a
+  * ~1.9M-row spine is faster distributed). Conf 0 skips the preflight
+  * and forces the distributed path unconditionally (the plan-pin specs
+  * and the growth profiler do this; ALSO the right setting at cluster
+  * scale when the spine is known corpus-sized, where pinning the whole
+  * spine before range-splitting it doubles the spine materializations).
+  * The distributed plan stays the documented contract at scale — the
+  * degrade is a bounded local optimization, never a semantics change.
   */
 object RankedSpine {
-
-  /** Session conf key for the auto-degrade threshold; see the object
-    * scaladoc. 0 disables the preflight and forces the distributed
-    * path.
-    */
-  val SmallSpineConf = "spark.graft.rankedSpine.smallSpineRows"
-  val SmallSpineDefault = 500000L
 
   /** Adds one exclusive-prefix column per `(input, output)` pair in
     * `sums` to `cells`: `output` = the sum of `input` over all spine
@@ -134,7 +120,7 @@ object RankedSpine {
     val spark = cells.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
     val g = groupCols.map(col)
-    val threshold = spark.conf.get(SmallSpineConf, SmallSpineDefault.toString).toLong
+    val threshold = SmallInput.threshold(spark)
     // preflight: pin the cells ONCE (the spine-aggregate lineage runs a
     // single time, into the checkpoint) and count the pin (~free). Both
     // paths below reuse the pin:
@@ -150,7 +136,7 @@ object RankedSpine {
     //    offset table is only valid against the exact range partitions.
     // Identical integral sums in identical per-group spine order ⇒ the
     // two paths are bit-identical. conf 0 skips the preflight entirely.
-    // prePinned (r17-opt): a caller that already holds `cells` as a
+    // prePinned: a caller that already holds `cells` as a
     // localCheckpoint (or another cheap-to-re-evaluate materialization
     // it shares with its OWN follow-up passes — the kruskal/moods/ks
     // totals) sets prePinned=true and the preflight skips the second
@@ -161,16 +147,11 @@ object RankedSpine {
     val pinned =
       if (threshold > 0 && !prePinned) cells.localCheckpoint(true) else cells
     // the wall the degrade guards against is ONE WINDOW TASK's input —
-    // the largest per-group spine, not the total (r16-opt): the legacy
-    // window below is partitioned by group, so 3 even groups of 196k
-    // rows sort as 3 parallel ≤196k tasks, firmly inside the measured
-    // crossover, while the old total-rows count (590k > 500k) pushed
-    // exactly that shape onto the distributed path (q_weighted_median,
-    // same-window A/B: 4.46 → 3.36 s warm medians, controls level).
-    // Global spines (no groups) keep the plain
-    // count. The grouped preflight is one slim group-grain agg over the
-    // pin; the r14/r15 crossover evidence is unchanged (one-hot regime:
-    // max == total; global regime: same count as before).
+    // the largest per-group spine, not the total: the window below is
+    // partitioned by group, so 3 even groups of 196k rows sort as 3
+    // parallel ≤196k tasks, inside the measured crossover. Global
+    // spines (no groups) keep the plain count; the grouped preflight is
+    // one slim group-grain agg over the pin.
     val spineRows: Long =
       if (threshold <= 0) Long.MaxValue
       else if (groupCols.isEmpty) pinned.count()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallInput
 import graft.operators.quantile.Quantiles
 import graft.sources.Snapshot
 
@@ -82,7 +83,7 @@ class GroupPercentilesSpec extends SparkSpecBase {
     // the default-conf runs above exercise the driver degrade; this case
     // pins degrade == distributed == percentile() on the same inputs
     val sn = Snapshot(spark, sf())
-    val key = Quantiles.SmallInputConf
+    val key = SmallInput.Conf
     val orig = spark.conf.getOption(key)
     try {
       spark.conf.set(key, "0") // forced distributed
@@ -98,18 +99,18 @@ class GroupPercentilesSpec extends SparkSpecBase {
   test("distributed path raises on a non-driver-modest slice table (VERDICT r16 item 4)") {
     import spark.implicits._
     val df = (1 to 2000).map(i => (s"g$i", i.toDouble)).toDF("g", "v")
-    val origSmall = spark.conf.getOption(Quantiles.SmallInputConf)
+    val origSmall = spark.conf.getOption(SmallInput.Conf)
     val origMax = spark.conf.getOption(Quantiles.MaxDriverSlicesConf)
     try {
-      spark.conf.set(Quantiles.SmallInputConf, "0") // force distributed
+      spark.conf.set(SmallInput.Conf, "0") // force distributed
       spark.conf.set(Quantiles.MaxDriverSlicesConf, "100")
       val e = intercept[IllegalArgumentException] {
         Quantiles.groupPercentilesExact(df, "g", "v", Seq(0.5), Seq("m")).collect()
       }
       assert(e.getMessage.contains("slice table exceeds"), e.getMessage)
     } finally {
-      origSmall.fold(spark.conf.unset(Quantiles.SmallInputConf))(
-        spark.conf.set(Quantiles.SmallInputConf, _))
+      origSmall.fold(spark.conf.unset(SmallInput.Conf))(
+        spark.conf.set(SmallInput.Conf, _))
       origMax.fold(spark.conf.unset(Quantiles.MaxDriverSlicesConf))(
         spark.conf.set(Quantiles.MaxDriverSlicesConf, _))
     }

@@ -110,20 +110,25 @@ class PlanSpec extends SparkSpecBase {
   // every sweep needs each catalog query EXECUTED (the CLAUDE.md plan-
   // assertion rule — AQE finalizes plans only after execution), and
   // executing the 260+-query catalog once per sweep tripled the suite's
-  // most expensive wall time for no added coverage (ADVICE r14). The
-  // sweeps below assert their predicates on these cached executed plans;
-  // per-sweep allow-lists are applied at assertion time, never by
-  // skipping execution.
-  // One broken query must not dark the sweeps (round-5 lesson: both
-  // sweeps aborted at the first analysis exception and NO plan was
-  // checked) — errors are collected and failed separately, once.
+  // most expensive wall time for no added coverage. The sweeps below
+  // assert their predicates on these cached executed plans; per-sweep
+  // allow-lists are applied at assertion time, never by skipping
+  // execution. Each query keeps EVERY execution it ran — build-time
+  // pins and probes as well as the action — so a scale killer inside a
+  // `localCheckpoint` pin is audited too.
+  // One broken query must not dark the sweeps (both sweeps once aborted
+  // at the first analysis exception and NO plan was checked) — errors
+  // are collected and failed separately, once.
   private lazy val sweepPlans
-      : Seq[(String, scala.util.Try[org.apache.spark.sql.execution.SparkPlan])] =
+      : Seq[(String, scala.util.Try[Seq[org.apache.spark.sql.execution.SparkPlan]])] =
     SparkEntry.queries.keySet.toSeq.sorted.map { name =>
       name -> scala.util.Try {
-        val df = SparkEntry.queries(name)(spark, sf())
-        df.collect()
-        df.queryExecution.executedPlan
+        val (df, qes) = org.apache.spark.grafttest.Bus.capture(spark) {
+          val df = SparkEntry.queries(name)(spark, sf())
+          df.collect()
+          df
+        }
+        (qes :+ df.queryExecution).distinct.map(_.executedPlan)
       }
     }
 
@@ -133,8 +138,8 @@ class PlanSpec extends SparkSpecBase {
     // without a cartesian/unconditioned nested-loop join
     val allowed = Set("q_dedup_embedding")
     val offenders = sweepPlans.collect {
-      case (n, scala.util.Success(p))
-          if !allowed(n) && p.toString.contains("CartesianProduct") => n
+      case (n, scala.util.Success(ps))
+          if !allowed(n) && ps.exists(_.toString.contains("CartesianProduct")) => n
     }
     val errored = sweepPlans.collect { case (n, scala.util.Failure(e)) =>
       s"$n (${e.getMessage.take(120)})" }
@@ -180,8 +185,8 @@ class PlanSpec extends SparkSpecBase {
     // sweep's documented q_dedup_embedding baseline.
     val allowed = Set("q_rrf_fusion")
     val offenders = sweepPlans.collect {
-      case (n, scala.util.Success(p))
-          if !allowed(n) && globalWindows(p).nonEmpty => n
+      case (n, scala.util.Success(ps))
+          if !allowed(n) && ps.exists(globalWindows(_).nonEmpty) => n
     }
     assert(offenders.isEmpty, s"single-task global windows over base data in: $offenders")
     // each sweep must fail on unexecuted plans itself — running this
@@ -205,9 +210,9 @@ class PlanSpec extends SparkSpecBase {
     // killer. The doubled-rank family (mannWhitney / cliffsDelta /
     // wilcoxonSigned / kruskalWallis / ksTwoSample) ran exactly that
     // shape before the RankedSpine refactor; nothing may reintroduce it.
-    // NOTE: RankedSpine's r15 small-spine auto-degrade IS such a window,
-    // but over a localCheckpoint scan whose row count the preflight
-    // BOUNDED (≤ smallSpineRows) — the checkpoint truncates the lineage,
+    // NOTE: RankedSpine's small-spine degrade IS such a window, but
+    // over a localCheckpoint scan whose row count the preflight BOUNDED
+    // (≤ SmallInput.threshold) — the checkpoint truncates the lineage,
     // so no Aggregate appears below it and the detector correctly does
     // not fire; RankedSpineSpec pins both the bound and the forced
     // distributed shape.
@@ -241,7 +246,7 @@ class PlanSpec extends SparkSpecBase {
       here ++ kids(p).flatMap(valueSpineWindows)
     }
     val offenders = sweepPlans.collect {
-      case (n, scala.util.Success(p)) if valueSpineWindows(p).nonEmpty => n
+      case (n, scala.util.Success(ps)) if ps.exists(valueSpineWindows(_).nonEmpty) => n
     }
     assert(offenders.isEmpty, s"unpartitioned continuous-value-spine windows in: $offenders")
     val errored = sweepPlans.collect { case (n, scala.util.Failure(e)) =>
@@ -274,29 +279,17 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("outlier audit: fences broadcast back; the fact scan reads only 2 columns") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
     // iqrAudit pins its (group, value) projection with an eager
     // localCheckpoint at build time, so the lineitem scan runs in the
     // pin's own execution and the action's plan reads `Scan ExistingRDD`.
-    // Capture every execution the query runs (pins and action); drain
-    // first so late events from earlier tests stay out of the capture.
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        captured.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    org.apache.spark.grafttest.Bus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    val df = try {
+    // Capture every execution the query runs (pins and action).
+    val (df, captured) = org.apache.spark.grafttest.Bus.capture(spark) {
       val q = SparkEntry.queries("q_outliers_iqr")(spark, sf())
       q.collect()
-      org.apache.spark.grafttest.Bus.drain(spark.sparkContext)
       q
-    } finally spark.listenerManager.unregister(listener)
+    }
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
     // every file scan must prune to the group + value columns — a
@@ -304,13 +297,37 @@ class PlanSpec extends SparkSpecBase {
     // audit. Columns come from the scan node's schema: the ReadSchema
     // text is abbreviated at spark.sql.maxMetadataStringLength
     val helper = new AdaptiveSparkPlanHelper {}
-    val reads = captured.asScala.toSeq.flatMap { qe =>
+    val reads = captured.flatMap { qe =>
       helper.collectWithSubqueries(qe.executedPlan) {
         case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq
       }
     }
     assert(reads.nonEmpty &&
       reads.forall(r => r.length <= 2), s"unpruned scans: $reads")
+  }
+
+  test("forced-distributed withNtile: no execution it runs holds a window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the boundary fetch ranks rows with one in-partition sort and a
+    // linear scan over the range split it already persisted — a
+    // row_number window there would add a pid exchange and a window pass.
+    // The fetch runs at build time, so every execution is audited.
+    val s = spark.newSession()
+    s.conf.set(graft.operators.SmallInput.Conf, "0")
+    import s.implicits._
+    val in = (1 to 400).map(i => (i.toLong, (i % 17).toDouble)).toDF("k", "v")
+    val (out, captured) = org.apache.spark.grafttest.Bus.capture(s) {
+      val out = graft.operators.quantile.Quantiles.withNtile(in, "v", "k", 5, "b")
+      out.collect()
+      out
+    }
+    val plans = (captured :+ out.queryExecution).distinct.map(_.executedPlan)
+    assert(plans.exists(_.toString.contains("rangepartitioning")),
+      s"conf 0 must take the distributed branch:\n${plans.mkString("\n").take(3000)}")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val windows = plans.flatMap(p => helper.collectWithSubqueries(p) { case w: WindowExec => w })
+    assert(windows.isEmpty, s"window in the withNtile executions:\n${windows.mkString("\n")}")
   }
 
   test("mg sketch: partial sketches merge via ObjectHashAggregate; totals attach broadcast") {

@@ -87,14 +87,14 @@ object ProfileRankedSpine {
         .where(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select("__v").distinct().count()
       // conf 0 forces the distributed path (the growth evidence must
-      // not silently measure the r15 auto-degrade below the crossover);
+      // not silently measure the small-input degrade below the crossover);
       // the third row times the committed DEFAULT (preflight + degrade-
       // or-distribute) — it should track min(ranked, legacy) + the
       // preflight count
-      spark.conf.set(graft.operators.stats.RankedSpine.SmallSpineConf, "0")
+      spark.conf.set(graft.operators.SmallInput.Conf, "0")
       val tNew = median3(force(graft.operators.stats.Stats
         .mannWhitney(amplified, "o_orderpriority", "__v", "1-URGENT", "5-LOW")))
-      spark.conf.unset(graft.operators.stats.RankedSpine.SmallSpineConf)
+      spark.conf.unset(graft.operators.SmallInput.Conf)
       val tAuto = median3(force(graft.operators.stats.Stats
         .mannWhitney(amplified, "o_orderpriority", "__v", "1-URGENT", "5-LOW")))
       val tOld = median3(force(legacyR2a(amplified)))
@@ -104,10 +104,10 @@ object ProfileRankedSpine {
       // legacy per-group window funnels its whole spine into one task
       val hot = amplified.select(lit("hot").as("g"), col("__v"),
         (col("o_orderkey") % 3 === 0).as("__lbl"))
-      spark.conf.set(graft.operators.stats.RankedSpine.SmallSpineConf, "0")
+      spark.conf.set(graft.operators.SmallInput.Conf, "0")
       val tNewG = median3(force(graft.operators.stats.Stats
         .rocAucByGroup(hot, Seq("g"), "__v", col("__lbl"))))
-      spark.conf.unset(graft.operators.stats.RankedSpine.SmallSpineConf)
+      spark.conf.unset(graft.operators.SmallInput.Conf)
       val tAutoG = median3(force(graft.operators.stats.Stats
         .rocAucByGroup(hot, Seq("g"), "__v", col("__lbl"))))
       val tOldG = median3(force(legacyGroupedR2(hot)))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.SmallInput
 import graft.operators.quantile.Quantiles
 import graft.sources.Snapshot
 
@@ -96,9 +97,9 @@ class QuantilesSpec extends SparkSpecBase {
     * asserts both results equal — the r17 degrade's bit-identity pin.
     */
   private def assertDegradeParity[T](body: => T): (T, T) = {
-    val key = Quantiles.SmallInputConf
+    val key = SmallInput.Conf
     val orig = spark.conf.getOption(key)
-    val degraded = { spark.conf.set(key, Quantiles.SmallInputDefault.toString); body }
+    val degraded = { spark.conf.set(key, SmallInput.Default.toString); body }
     val distributed = { spark.conf.set(key, "0"); body }
     orig match {
       case Some(v) => spark.conf.set(key, v)
@@ -203,18 +204,18 @@ class QuantilesSpec extends SparkSpecBase {
   test("withNtileByGroup distributed path raises on a non-driver-modest slice table") {
     import spark.implicits._
     val df = (1 to 2000).map(i => (s"g$i", i.toDouble, i.toLong)).toDF("g", "v", "k")
-    val origSmall = spark.conf.getOption(Quantiles.SmallInputConf)
+    val origSmall = spark.conf.getOption(SmallInput.Conf)
     val origMax = spark.conf.getOption(Quantiles.MaxDriverSlicesConf)
     try {
-      spark.conf.set(Quantiles.SmallInputConf, "0") // force distributed
+      spark.conf.set(SmallInput.Conf, "0") // force distributed
       spark.conf.set(Quantiles.MaxDriverSlicesConf, "100")
       val e = intercept[IllegalArgumentException] {
         Quantiles.withNtileByGroup(df, "g", "v", "k", 4, "b").collect()
       }
       assert(e.getMessage.contains("slice table exceeds"), e.getMessage)
     } finally {
-      origSmall.fold(spark.conf.unset(Quantiles.SmallInputConf))(
-        spark.conf.set(Quantiles.SmallInputConf, _))
+      origSmall.fold(spark.conf.unset(SmallInput.Conf))(
+        spark.conf.set(SmallInput.Conf, _))
       origMax.fold(spark.conf.unset(Quantiles.MaxDriverSlicesConf))(
         spark.conf.set(Quantiles.MaxDriverSlicesConf, _))
     }

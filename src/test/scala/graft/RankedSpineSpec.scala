@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.SmallInput
 import graft.operators.stats.RankedSpine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -48,10 +49,10 @@ class RankedSpineSpec extends SparkSpecBase {
     // sweep includes 1 (degenerate single partition), a count that cuts
     // every group, and more partitions than the default; threshold 0
     // forces the distributed path, the default degrades (600 rows < 2M)
-    for (parts <- Seq(1, 3, 7, 32, 64); thr <- Seq("0", RankedSpine.SmallSpineDefault.toString)) {
+    for (parts <- Seq(1, 3, 7, 32, 64); thr <- Seq("0", SmallInput.Default.toString)) {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      s.conf.set(RankedSpine.SmallSpineConf, thr)
+      s.conf.set(SmallInput.Conf, thr)
       import s.implicits._
       val df = rows.toDF("g", "s", "ca", "cb")
       val got = RankedSpine
@@ -66,9 +67,9 @@ class RankedSpineSpec extends SparkSpecBase {
 
   test("prePinned=true (caller-checkpointed cells) == reference on BOTH paths") {
     val want = reference(rows)
-    for (thr <- Seq("0", RankedSpine.SmallSpineDefault.toString)) {
+    for (thr <- Seq("0", SmallInput.Default.toString)) {
       val s = spark.newSession()
-      s.conf.set(RankedSpine.SmallSpineConf, thr)
+      s.conf.set(SmallInput.Conf, thr)
       import s.implicits._
       val df = rows.toDF("g", "s", "ca", "cb").localCheckpoint(true)
       val got = RankedSpine
@@ -85,9 +86,9 @@ class RankedSpineSpec extends SparkSpecBase {
   test("global (no-group) prefix == single-task reference on BOTH paths; first row gets 0") {
     val flat = rows.map { case (_, s, ca, cb) => ("all", s * 7 + ca, ca, cb) }
     val want = reference(flat)
-    for (thr <- Seq("0", RankedSpine.SmallSpineDefault.toString)) {
+    for (thr <- Seq("0", SmallInput.Default.toString)) {
       val s = spark.newSession()
-      s.conf.set(RankedSpine.SmallSpineConf, thr)
+      s.conf.set(SmallInput.Conf, thr)
       import s.implicits._
       val got = RankedSpine
         .exclusivePrefix(
@@ -131,7 +132,7 @@ class RankedSpineSpec extends SparkSpecBase {
     */
   private def distributedSession(): org.apache.spark.sql.SparkSession = {
     val s = spark.newSession()
-    s.conf.set(RankedSpine.SmallSpineConf, "0")
+    s.conf.set(SmallInput.Conf, "0")
     s
   }
 
@@ -218,7 +219,7 @@ class RankedSpineSpec extends SparkSpecBase {
     // preflight guards is one group's rows in one task — while a single
     // 150-row group (max 150 > 100) must take the DISTRIBUTED path
     val s = spark.newSession()
-    s.conf.set(RankedSpine.SmallSpineConf, "100")
+    s.conf.set(SmallInput.Conf, "100")
     import s.implicits._
     val even = (for (gi <- 0 until 3; v <- 0 until 60)
       yield (s"g$gi", v.toLong * 2, (v % 3 + 1).toLong)).toDF("g", "s", "cnt")

@@ -1,6 +1,7 @@
 package graft
 
 
+import graft.operators.SmallInput
 import graft.operators.dedup.TransitiveDedup
 
 class TransitiveDedupSpec extends SparkSpecBase {
@@ -45,7 +46,7 @@ class TransitiveDedupSpec extends SparkSpecBase {
     // forces the distributed loop (99 edges would otherwise degrade to
     // the driver union-find and make this pin vacuous).
     val s = spark.newSession()
-    s.conf.set(TransitiveDedup.SmallEdgesConf, "0")
+    s.conf.set(SmallInput.Conf, "0")
     import s.implicits._
     val chain = (1L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val (labels, rounds) = TransitiveDedup.componentsWithRounds(chain)
@@ -68,7 +69,7 @@ class TransitiveDedupSpec extends SparkSpecBase {
     val (degraded, r0) = TransitiveDedup.componentsWithRounds(pairs)
     assert(r0 == 0, "the small edge set must take the driver path")
     val s = spark.newSession()
-    s.conf.set(TransitiveDedup.SmallEdgesConf, "0")
+    s.conf.set(SmallInput.Conf, "0")
     val pairsD = {
       import s.implicits._
       (
@@ -100,7 +101,7 @@ class TransitiveDedupSpec extends SparkSpecBase {
     assert(comp.values.toSet == Set(hi), s"component minimum must be U+FFFF under UTF-8 order: $comp")
     // and the distributed path agrees
     val s = spark.newSession()
-    s.conf.set(TransitiveDedup.SmallEdgesConf, "0")
+    s.conf.set(SmallInput.Conf, "0")
     val pairsD = { import s.implicits._; Seq((hi, supp), (supp, "zz")).toDF("id_a", "id_b") }
     val compD = TransitiveDedup.components(pairsD).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -117,7 +118,7 @@ class TransitiveDedupSpec extends SparkSpecBase {
     val comp = TransitiveDedup.components(pairs).collect()
       .map(r => r.getDecimal(0).toPlainString -> r.getDecimal(1).toPlainString).toMap
     val s = spark.newSession()
-    s.conf.set(TransitiveDedup.SmallEdgesConf, "0")
+    s.conf.set(SmallInput.Conf, "0")
     val pairsD = { import s.implicits._
       Seq((BigDecimal("10.50"), BigDecimal("2.25")), (BigDecimal("2.25"), BigDecimal("30.00")))
         .toDF("id_a", "id_b") }
