@@ -39,15 +39,7 @@ object Bench {
     val prevArtifact: Option[String] =
       try { if (Files.exists(Paths.get(outPath))) Some(Files.readString(Paths.get(outPath))) else None }
       catch { case _: Throwable => None }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.tune(spark)
 

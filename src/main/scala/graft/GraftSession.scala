@@ -9,8 +9,19 @@ import org.apache.spark.sql.SparkSession
   * (legacy arithmetic: wrapping longs for hash math, lenient casts), UTC
   * session time zone, shuffle partitions sized to the local core count
   * rather than Spark's default 200.
+  *
+  * `spark.sql.codegen.cache.maxEntries` is raised from Spark's 100 to
+  * [[CodegenCacheEntries]]. The compiled-class cache is an LRU, and one
+  * corpus pipeline pass generates about 100 distinct classes, so at 100
+  * entries every class was evicted just before the next pass needed it
+  * and Janino recompiled the whole pass. 1000 holds a mixed session's
+  * working set (a cold corpus pass, the agent calls, catalog queries).
+  * A caller may override the key with `.config(...)` after `builder`.
   */
 object GraftSession {
+
+  /** Entries of Spark's compiled-class cache in every graft session. */
+  val CodegenCacheEntries: Int = 1000
 
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession
@@ -23,6 +34,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = 32): SparkSession = {
@@ -32,8 +44,13 @@ object GraftSession {
   }
 
   /** Idempotently applies graft runtime settings + function registrations to
-    * an externally-created session (the driver's Verify/Bench sessions).
+    * a session, including one created outside [[builder]].
     * Only runtime-settable confs are touched.
+    *
+    * The compiled-class cache size is not one of them: the cache is
+    * JVM-wide and static, sized once from the conf of the first session
+    * that generates code, so `tune` cannot set it. Build the session with
+    * [[builder]] to get it.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.ansi.enabled", "false")
