@@ -30,6 +30,46 @@ private[operators] object CacheScope {
   }
 }
 
+/** The candidate-pair core of the near-duplicate family: rows keyed by
+  * `keys` (an `id` column plus any `carry` columns) become the pairs of
+  * rows that share a key. Contract:
+  *  - pairs are `id_a < id_b`, one row per pair however many keys it
+  *    shares;
+  *  - only keys with 2..`maxMembers` members produce pairs — a larger key
+  *    (boilerplate shingles, degenerate buckets) yields none, which keeps
+  *    the quadratic self-join bounded per key;
+  *  - carried columns come back as `<c>_a` / `<c>_b`, and `score` runs on
+  *    the deduplicated pairs inside the scope;
+  *  - the result is pinned and the keyed rows' persist is released
+  *    before returning ([[CacheScope]]).
+  */
+private[dedup] object BucketPairs {
+  def apply(keyed: DataFrame, keys: Seq[String], maxMembers: Int, carry: Seq[String] = Nil,
+      score: DataFrame => DataFrame = identity): DataFrame =
+    // the keyed rows feed the key-size aggregate and the join-back.
+    // Aggregate + join instead of a window: no sort, and the filter
+    // shrinks the self-join input to the shared-key minority.
+    CacheScope.withPersisted(keyed) { rows =>
+      val usable = rows.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("bsz"))
+        .where(col("bsz") >= 2 && col("bsz") <= maxMembers)
+        .select(keys.map(col): _*)
+      score(selfJoin(rows.join(usable, keys), keys, carry))
+    }
+
+  /** The uncapped half: `id_a < id_b` pairs of `rows` sharing a key,
+    * deduplicated, neither persisted nor pinned.
+    */
+  def selfJoin(rows: DataFrame, keys: Seq[String], carry: Seq[String] = Nil): DataFrame = {
+    val cols = "id" +: carry
+    def side(s: String) = rows.select(keys.map(col) ++ cols.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys)
+      .where(col("id_a") < col("id_b"))
+      .select(cols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+      .dropDuplicates("id_a", "id_b")
+  }
+}
+
 /** Exact deduplication by content hash: hash-partitioned groupBy, keep the
   * lowest id per content key. One shuffle on the (high-cardinality, evenly
   * distributed) hash — the canonical 100 TB-safe exact dedup.
@@ -151,28 +191,35 @@ private[graft] object Shingling {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
 
-  /** Exact Jaccard over distinct shingle-hash sets, attached to candidate
-    * pairs. Shingles are computed only for docs that appear in a pair
-    * (semi-join first) — at 100 TB the candidate set is orders of magnitude
-    * smaller than the corpus. The candidate shingle sets feed BOTH join
-    * sides (sh_a / sh_b), so they are persisted for the call and released
-    * once the verified pairs are materialized (CacheScope) — previously
-    * candidates were re-shingled once per side.
+  /** Candidate pairs with their distinct shingle-hash sets attached as
+    * `sh_a` / `sh_b`; `score` picks the output columns. Shingles are
+    * computed only for docs that appear in a pair (semi-join first) — at
+    * 100 TB the candidate set is orders of magnitude smaller than the
+    * corpus. The candidate shingle sets feed BOTH join sides, so they are
+    * persisted for the call and released once the scored pairs are
+    * materialized (CacheScope), never re-shingled once per side.
     */
-  def verifyJaccard(pairs: DataFrame, df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+  def withShingleSets(pairs: DataFrame, df: DataFrame, idCol: String, textCol: String, n: Int)(
+      score: DataFrame => DataFrame): DataFrame = {
     val candIds = pairs.select(col("id_a").as("id"))
       .unionAll(pairs.select(col("id_b").as("id"))).distinct()
     val sh0 = df.select(col(idCol).as("id"), col(textCol))
       .join(candIds, Seq("id"), "left_semi")
       .select(col("id"), array_distinct(shingleHashes(col(textCol), n)).as("sh"))
     CacheScope.withPersisted(sh0) { sh =>
-      pairs
+      score(pairs
         .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-        .select(col("id_a"), col("id_b"), col("jaccard"))
+        .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b")))
     }
   }
+
+  /** Exact Jaccard over distinct shingle-hash sets, attached to candidate
+    * pairs: (id_a, id_b, jaccard).
+    */
+  def verifyJaccard(pairs: DataFrame, df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    withShingleSets(pairs, df, idCol, textCol, n)(
+      _.withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+        .select(col("id_a"), col("id_b"), col("jaccard")))
 }
 
 /** MinHash + LSH near-duplicate detection.
@@ -201,6 +248,14 @@ object MinHashDedup {
   def signature(textCol: Column, shingle: Int = DefaultShingle): Column =
     GraftFunctions.minhashSig(Shingling.shingleHashes(textCol, shingle))
 
+  /** The 16 band buckets of a text: the fused words→buckets expression
+    * at the default shingle size, the signature then its banding
+    * otherwise.
+    */
+  private[dedup] def bandColumn(textCol: Column, shingle: Int): Column =
+    if (shingle == DefaultShingle) GraftFunctions.minhashBands(split(lower(textCol), " "))
+    else GraftFunctions.bandBuckets(signature(textCol, shingle))
+
   /** Candidate pairs (id_a < id_b) from banded LSH buckets, with exact
     * Jaccard over shingle sets attached.
     */
@@ -212,44 +267,17 @@ object MinHashDedup {
       maxBucketSize: Int = 1000): DataFrame = {
     // Banded rows stay slim — (id, band, bucket) only. Shingle sets are
     // re-attached after pair dedup; shuffling ~150-string arrays through
-    // the band explode dominates runtime otherwise. The fused expression
-    // goes words→buckets in one call (default shingle size only).
-    val bucketsCol =
-      if (shingle == DefaultShingle) GraftFunctions.minhashBands(split(lower(col(textCol)), " "))
-      else GraftFunctions.bandBuckets(signature(col(textCol), shingle))
-    // two consumers (bucket-size agg + join-back): persisted for the call
-    // so the shingle→minhash→band projection runs once over the corpus,
-    // released once the slim (id_a, id_b) pair set is materialized
-    // Deliberately NOT fanned out (r16-opt A/B: 1.74 → 2.42 s): the
-    // fused native banding is cheap per row, and the consumers re-key by
-    // (band, bucket) anyway, so an id-keyed fan-out exchange buys no
-    // downstream partitioning — pure overhead here, unlike PrefixFilter
-    // whose per-doc window reuses the id partitioning.
-    val banded0 = df
-      .select(col(idCol).as("id"), bucketsCol.as("bs"))
+    // the band explode dominates runtime otherwise. Not fanned out: the
+    // fused native banding is cheap per row and the pair core re-keys by
+    // (band, bucket), so an id-keyed exchange buys no downstream
+    // partitioning (unlike PrefixFilter, whose per-doc window reuses it).
+    val banded = df
+      .select(col(idCol).as("id"), bandColumn(col(textCol), shingle).as("bs"))
       .select(col("id"), posexplode(col("bs")))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
-
-    val pairs = CacheScope.withPersisted(banded0) { banded =>
-      // Keep only buckets shared by >=2 docs (others can't produce pairs)
-      // and cap degenerate buckets (skew guard). Aggregate+join instead of
-      // a window: no sort, and the filter shrinks the self-join input to
-      // the shared-bucket minority.
-      val usable = banded.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("bsz"))
-        .where(col("bsz") >= 2 && col("bsz") <= maxBucketSize)
-        .select("band", "bucket")
-      val bounded = banded.join(usable, Seq("band", "bucket"))
-
-      val l = bounded.select(col("band"), col("bucket"), col("id").as("id_a"))
-      val r = bounded.select(col("band"), col("bucket"), col("id").as("id_b"))
-      l.join(r, Seq("band", "bucket"))
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-    }
-    Shingling.verifyJaccard(pairs, df, idCol, textCol, shingle)
+    Shingling.verifyJaccard(BucketPairs(banded, Seq("band", "bucket"), maxBucketSize),
+      df, idCol, textCol, shingle)
   }
 
   def duplicatePairs(df: DataFrame, idCol: String, textCol: String, threshold: Double = 0.5): DataFrame =
@@ -277,9 +305,9 @@ object SimHashDedup {
       maxBucketSize: Int = 1000): DataFrame =
     // the banding/skew-guard/popcount core is the signature-generic
     // [[HammingDedup]] — simhash only contributes the text signature.
-    // Deliberately NOT fanned out: the native simhash projection is
-    // cheap enough that the extra exchange measured as a net loss
-    // (1.41 → 1.73 s A/B at sf0.1; r16-opt).
+    // Not fanned out: the native simhash projection is cheap, and the
+    // pair core re-keys by (band, bucket), so an extra id-keyed exchange
+    // costs more than it parallelizes.
     HammingDedup.candidatePairs(
       df.select(col(idCol).as("id"), signature(col(textCol)).as("sig")),
       "id", "sig", maxBucketSize)
@@ -318,28 +346,12 @@ object HammingDedup {
       struct(lit(c).as("band"),
         shiftrightunsigned(col("sig"), c * ChunkBits).bitwiseAND(lit(0xFFFFL)).as("bucket"))
     }
-    val banded0 = base
+    val banded = base
       .select(col("id"), col("sig"), explode(array(chunkCols: _*)).as("bb"))
       .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    // same two-consumer call-scoped persist as MinHash: signature computed
-    // once, blocks released once the slim pair set is materialized
-    CacheScope.withPersisted(banded0) { banded =>
-      // same skew guard as MinHash: only buckets with 2..max members can
-      // produce pairs without blowing up the self-join
-      val usable = banded.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("bsz"))
-        .where(col("bsz") >= 2 && col("bsz") <= maxBucketSize)
-        .select("band", "bucket")
-      val bounded = banded.join(usable, Seq("band", "bucket"))
-      val l = bounded.select(col("band"), col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
-      val r = bounded.select(col("band"), col("bucket"), col("id").as("id_b"), col("sig").as("sig_b"))
-      l.join(r, Seq("band", "bucket"))
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), col("sig_a"), col("sig_b"))
-        .dropDuplicates("id_a", "id_b")
-        .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-        .drop("sig_a", "sig_b")
-    }
+    BucketPairs(banded, Seq("band", "bucket"), maxBucketSize, carry = Seq("sig"),
+      score = _.withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+        .drop("sig_a", "sig_b"))
   }
 
   /** Pairs (id_a < id_b, hamming) within `maxHamming` of each other.
@@ -379,33 +391,17 @@ object NGramJaccardDedup {
       idCol: String,
       textCol: String,
       shingle: Int,
-      maxShingleFreq: Int): DataFrame = {
+      maxShingleFreq: Int): DataFrame =
     // Slim (shingle-hash, id) rows through the shuffle; shingle sets are
-    // re-attached to candidates only (same reasoning as MinHash). The
-    // exploded set feeds both the frequency agg and the join-back —
-    // persisted for the call so shingling+explode runs once, released
-    // when the slim pair set is materialized
-    // Deliberately NOT fanned out (r16-opt A/B: 1.63 → 1.97 s): native
-    // hash shingling is cheap and both consumers re-key by the shingle
-    // hash — an id-keyed fan-out exchange buys nothing downstream (the
-    // PrefixFilter variant keeps its fan-out because its per-doc prefix
-    // window DOES reuse the id partitioning).
-    val exploded0 = df.select(
-      col(idCol).as("id"),
-      explode(array_distinct(Shingling.shingleHashes(col(textCol), shingle))).as("s"))
-    CacheScope.withPersisted(exploded0) { exploded =>
-      val usable = exploded.groupBy("s")
-        .agg(count(lit(1)).as("freq"))
-        .where(col("freq") >= 2 && col("freq") <= maxShingleFreq)
-        .select("s")
-      val bounded = exploded.join(usable, Seq("s"))
-      bounded.select(col("s"), col("id").as("id_a"))
-        .join(bounded.select(col("s"), col("id").as("id_b")), Seq("s"))
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-    }
-  }
+    // re-attached to candidates only (same reasoning as MinHash). Not
+    // fanned out: native hash shingling is cheap and the pair core re-keys
+    // by the shingle hash, so an id-keyed exchange buys nothing downstream
+    // (PrefixFilter keeps its fan-out because its per-doc prefix window
+    // does reuse the id partitioning).
+    BucketPairs(
+      df.select(col(idCol).as("id"),
+        explode(array_distinct(Shingling.shingleHashes(col(textCol), shingle))).as("s")),
+      Seq("s"), maxShingleFreq)
 
   /** Candidate pairs with CONTAINMENT scores (|A∩B|/|A| and /|B|)
     * alongside Jaccard: a short doc quoted inside a long one scores near
@@ -419,21 +415,11 @@ object NGramJaccardDedup {
       idCol: String,
       textCol: String,
       shingle: Int = 5,
-      maxShingleFreq: Int = 100): DataFrame = {
-    val pairs = sharedShinglePairs(df, idCol, textCol, shingle, maxShingleFreq)
-    val candIds = pairs.select(col("id_a").as("id"))
-      .unionAll(pairs.select(col("id_b").as("id"))).distinct()
-    val sh0 = df.select(col(idCol).as("id"), col(textCol))
-      .join(candIds, Seq("id"), "left_semi")
-      .select(col("id"),
-        array_distinct(Shingling.shingleHashes(col(textCol), shingle)).as("sh"))
-    // candidate shingle sets feed both join sides — call-scoped persist,
-    // like verifyJaccard
-    CacheScope.withPersisted(sh0) { sh =>
-      pairs
-        .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      maxShingleFreq: Int = 100): DataFrame =
+    Shingling.withShingleSets(
+      sharedShinglePairs(df, idCol, textCol, shingle, maxShingleFreq),
+      df, idCol, textCol, shingle) {
+      _.withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
         .select(
           col("id_a"), col("id_b"),
           (col("n_inter").cast("double") /
@@ -441,7 +427,6 @@ object NGramJaccardDedup {
           (col("n_inter").cast("double") / size(col("sh_a")).cast("double")).as("containment_a"),
           (col("n_inter").cast("double") / size(col("sh_b")).cast("double")).as("containment_b"))
     }
-  }
 
   /** Per-doc candidate stats (total, always one row per doc). */
   def stats(df: DataFrame, idCol: String, textCol: String, shingle: Int = 5): DataFrame = {
@@ -470,9 +455,8 @@ object NGramJaccardDedup {
   */
 object EmbeddingDedup {
   def duplicatePairs(df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    // deliberately NOT FanOut-gated (r16-opt A/B, warm medians at sf0.1:
-    // 0.372 s fanned vs 0.283 s plain): the BNL stream side is cheap to
-    // rescan and the gate's extra planning outweighs the parallelism win
+    // not FanOut-gated: the BNL stream side is cheap to rescan, and the
+    // gate's extra planning costs more than the parallelism gains
     val a = df.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val b = df.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
     a.join(b, col("id_a") < col("id_b"))
@@ -508,8 +492,8 @@ object EmbeddingDedup {
           explode(GraftFunctions.nearestCells(col("__cv"), index.centroids, nAssign)).as("cell_id"))
     // cell-size cap: one degenerate cell would make the self-join quadratic
     // (the same skew guard as the banded dedups). Over-cap cells are NOT
-    // excluded (pre-r16 they were — silent under-dedup exactly where
-    // near-dup floods concentrate): they take the hot-cell path below.
+    // excluded — that would silently under-dedup exactly where near-dup
+    // floods concentrate: they take the hot-cell path below.
     // The cap is computed from the FIRST-CHOICE populations (index.assigned
     // — true cell sizes): probe overlays must not change which cells are
     // usable, or a near-cap cell would drop under nAssign>1 and multi-probe
@@ -543,10 +527,10 @@ object EmbeddingDedup {
           pairsOf(b, Seq("cell_id")).dropDuplicates("id_a", "id_b"))
       else pairsOf(bounded0, Seq("cell_id"))
 
-    // --- hot-cell path (VERDICT r15 #1): over-cap cells stay pair-eligible.
+    // --- hot-cell path: over-cap cells stay pair-eligible.
     // The cell list is ≤ nLists rows, so the gate check is a tiny agg over
     // the persisted assignment; the common case (no hot cell) costs one
-    // small job and returns the pre-r16 plan unchanged.
+    // small job and returns the within-cap plan unchanged.
     val hotCells = cellSizes.where(col("csz") > maxCellSize).select("cell_id")
     if (hotCells.isEmpty) basePairs
     else {
@@ -644,8 +628,8 @@ object EmbeddingDedup {
     dupStars.unionAll(pools.map(p => pairsOf(p, Seq("__hk"))).reduce(_ unionAll _))
   }
 
-  /** SemDeDup-shape semantic deduplication (Abbas et al. 2023; VERDICT
-    * r14 #4) — first-class composition of the existing primitives:
+  /** SemDeDup-shape semantic deduplication (Abbas et al. 2023) —
+    * first-class composition of the existing primitives:
     * IVF-cluster the embedding space and emit within-cluster cosine
     * pairs above `threshold` ([[duplicatePairsApprox]] — co-bucketed
     * candidates with exact-cosine verify, never all-pairs), close them
@@ -665,7 +649,7 @@ object EmbeddingDedup {
     * (one straddle allowed), and the pair-level gate separately holds
     * the 0.95 floor at cos ≥ 0.9 on its larger plant population.
     * Below-threshold pairs never merge (the exact verify stage).
-    * Over-cap cells stay pair-eligible since r16 (the hot-cell path of
+    * Over-cap cells stay pair-eligible (the hot-cell path of
     * [[duplicatePairsApprox]]: star-collapsed exact copies + re-quantized
     * distinct reps) — a near-dup flood landing one cell hot no longer
     * silently under-dedups; the hotcell SelfCheck gate plants one.
@@ -690,8 +674,8 @@ object EmbeddingDedup {
     TransitiveDedup.dedupeKeepBest(df, idCol, pairs, scoreCol)
   }
 
-  /** Incremental semantic near-dup for continuous ingestion (D39,
-    * VERDICT r15 #5) — batch-vs-corpus semantic dedup WITHOUT
+  /** Incremental semantic near-dup for continuous ingestion (D39) —
+    * batch-vs-corpus semantic dedup WITHOUT
     * re-clustering the corpus, composing the saved IVF index (D16's
     * continuously-maintained artifact at `path`) with [[dedupeSemantic]]'s
     * verify/close/keep-best semantics, the q_dedup_incremental shape:
@@ -891,8 +875,8 @@ object LineDedup {
     val parts = split(col(textCol), "\n")
     // fan the slim (id, text) rows out before the split+explode: both
     // dedupeUnits consumers re-derive the unit explode, and on a
-    // single-split input each ran it in a 1-task stage (ProfileStages,
-    // r16-opt); the shared exchange subtree is also reused, so the
+    // single-split input each ran it in a 1-task stage (ProfileStages);
+    // the shared exchange subtree is also reused, so the
     // corpus scan happens once. Gated no-op on multi-split inputs.
     val units = graft.operators.FanOut.byKey(
       df.where(col(idCol).isNotNull && col(textCol).isNotNull)

@@ -3,8 +3,6 @@ package graft.operators.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Persisted near-dup index for INGESTION-TIME near-duplicate detection
   * against a standing corpus — the near-dup twin of [[IncrementalDedup]]
   * (which proves exact-content absence) and the banded analogue of the
@@ -72,9 +70,8 @@ object MinHashIndex {
 
   private def shingleSetsOf(df: DataFrame, idCol: String, textCol: String, shingle: Int): DataFrame =
     // fan out before shingling — [[build]] persists these sets, and on a
-    // single-split corpus the persist inherited ONE partition,
-    // serializing every probe stage that reads it (2.7 s of
-    // q_dedup_incremental_near's 3.9 s, measured — r16-opt)
+    // single-split corpus the persist would inherit ONE partition,
+    // serializing every probe stage that reads it
     graft.operators.FanOut.byKey(
       df.where(col(textCol).isNotNull)
         .select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
@@ -86,19 +83,15 @@ object MinHashIndex {
       .withColumn("bucket", pmod(col("s"), lit(nBuckets.toLong)))
 
   private def bandsOf(df: DataFrame, idCol: String, textCol: String,
-      shingle: Int, nBuckets: Int): DataFrame = {
-    val bucketsCol =
-      if (shingle == MinHashDedup.DefaultShingle)
-        GraftFunctions.minhashBands(split(lower(col(textCol)), " "))
-      else GraftFunctions.bandBuckets(MinHashDedup.signature(col(textCol), shingle))
-    // same pre-banding fan-out as shingleSetsOf (r16-opt). bucketsCol
+      shingle: Int, nBuckets: Int): DataFrame =
+    // same pre-banding fan-out as shingleSetsOf. The band column
     // references textCol by name, so the projection keeps its name here.
     graft.operators.FanOut.byKey(
       df.where(col(textCol).isNotNull)
         .select(col(idCol).as("id"), col(textCol)), col("id"))
-      .select(col("id"), posexplode(bucketsCol).as(Seq("band", "bucket")))
+      .select(col("id"),
+        posexplode(MinHashDedup.bandColumn(col(textCol), shingle)).as(Seq("band", "bucket")))
       .withColumn("pbucket", pmod(xxhash64(col("band"), col("bucket")), lit(nBuckets.toLong)))
-  }
 
   /** Builds the in-memory store from a corpus: ONE shingling pass (the
     * sets feed the postings), one banding pass.
@@ -199,71 +192,69 @@ object MinHashIndex {
   private[graft] def prunedBandPostings(store: Store, pbuckets: Seq[Long]): DataFrame =
     store.bandPostings.where(col("pbucket").isin(pbuckets: _*))
 
+  /** The probes' shared frame: the batch's shingle sets persisted for
+    * the call, `cands` derives (batch_id, corpus_id) candidates from them,
+    * and every candidate is verified by EXACT Jaccard over the stored
+    * shingle sets — emitted pairs are never approximate.
+    */
+  private def verifiedProbe(store: Store, batch: DataFrame, idCol: String, textCol: String,
+      threshold: Double)(cands: DataFrame => DataFrame): DataFrame =
+    CacheScope.withPersisted(shingleSetsOf(batch, idCol, textCol, store.shingle)) { batchSets =>
+      cands(batchSets)
+        .join(batchSets.select(col("id").as("batch_id"), col("sh").as("sh_b")), Seq("batch_id"))
+        .join(store.shingleSets.select(col("id").as("corpus_id"), col("sh").as("sh_c")),
+          Seq("corpus_id"))
+        .withColumn("jaccard", Shingling.jaccard(col("sh_b"), col("sh_c")))
+        .where(col("jaccard") >= threshold)
+        .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+    }
+
+  /** Distinct (batch_id, corpus_id) pairs whose probe row and pruned
+    * corpus posting share `keys`, where a key with more than `maxMembers`
+    * corpus members is dropped (the skew guard). Pruning keeps whole key
+    * groups, so the count on the pruned scan IS the global count.
+    */
+  private def cappedCandidates(probe: DataFrame, pruned: DataFrame, keys: Seq[String],
+      maxMembers: Int): DataFrame = {
+    val usable = pruned.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+      .where(col("n") <= maxMembers)
+      .select(keys.map(col): _*)
+    probe
+      .join(pruned.join(usable, keys).select(keys.map(col) :+ col("id").as("corpus_id"): _*), keys)
+      .select("batch_id", "corpus_id").dropDuplicates("batch_id", "corpus_id")
+  }
+
   /** EXACT near-dup pairs (batch_id, corpus_id, jaccard >= threshold):
     * candidates share >= 1 exact shingle whose CORPUS document frequency
     * is <= `maxShingleFreq` (the C4 skew guard — boilerplate shingles
-    * with huge posting lists are excluded, and because pruning keeps
-    * whole shingle groups, the df computed on the pruned scan IS the
-    * global df). Complete modulo that cap; fully SQL-mirrorable.
+    * with huge posting lists are excluded). Complete modulo that cap;
+    * fully SQL-mirrorable.
     */
   def probeExact(store: Store, batch: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxShingleFreq: Int = 100): DataFrame = {
-    val batchSets0 = shingleSetsOf(batch, idCol, textCol, store.shingle)
-    CacheScope.withPersisted(batchSets0) { batchSets =>
+      threshold: Double, maxShingleFreq: Int = 100): DataFrame =
+    verifiedProbe(store, batch, idCol, textCol, threshold) { batchSets =>
       val probe = postingsOf(batchSets, store.nBuckets)
         .select(col("s"), col("bucket"), col("id").as("batch_id"))
-      val pruned = prunedShinglePostings(store, bucketList(probe, "bucket"))
-      val usable = pruned.groupBy("s")
-        .agg(count(lit(1)).as("df"))
-        .where(col("df") <= maxShingleFreq)
-        .select("s")
-      val cands = probe
-        .join(pruned.join(usable, Seq("s")).select(col("s"), col("id").as("corpus_id")), Seq("s"))
-        .select("batch_id", "corpus_id").dropDuplicates("batch_id", "corpus_id")
-      cands
-        .join(batchSets.select(col("id").as("batch_id"), col("sh").as("sh_b")), Seq("batch_id"))
-        .join(store.shingleSets.select(col("id").as("corpus_id"), col("sh").as("sh_c")),
-          Seq("corpus_id"))
-        .withColumn("jaccard", Shingling.jaccard(col("sh_b"), col("sh_c")))
-        .where(col("jaccard") >= threshold)
-        .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+      cappedCandidates(probe, prunedShinglePostings(store, bucketList(probe, "bucket")),
+        Seq("s"), maxShingleFreq)
     }
-  }
 
   /** MinHash-banded near-dup pairs — the bounded-candidate scale path:
     * candidates co-band (any of the 16 bands collides) within buckets of
-    * 2..maxBucketSize corpus members, then the exact-Jaccard verify over
-    * the stored shingle sets keeps only true >= threshold pairs. Recall
-    * at J: 1-(1-J^4)^16 (≈ 1 at J >= 0.9, exactly 1 for identical texts
-    * — every band collides); gated by planted-truth specs like C2.
+    * at most maxBucketSize corpus members, then the exact-Jaccard verify
+    * over the stored shingle sets keeps only true >= threshold pairs.
+    * Recall at J: 1-(1-J^4)^16 (≈ 1 at J >= 0.9, exactly 1 for identical
+    * texts — every band collides); gated by planted-truth specs like C2.
     */
   def probeBanded(store: Store, batch: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maxBucketSize: Int = 1000): DataFrame = {
-    val batchSets0 = shingleSetsOf(batch, idCol, textCol, store.shingle)
-    CacheScope.withPersisted(batchSets0) { batchSets =>
+      threshold: Double, maxBucketSize: Int = 1000): DataFrame =
+    verifiedProbe(store, batch, idCol, textCol, threshold) { _ =>
       val probe = bandsOf(batch, idCol, textCol, store.shingle, store.nBuckets)
         .select(col("band"), col("bucket"), col("pbucket"), col("id").as("batch_id"))
-      val pruned = prunedBandPostings(store, bucketList(probe, "pbucket"))
-      // corpus-side population cap per (band, bucket): complete groups
-      // under pruning, same skew-guard reasoning as MinHashDedup
-      val usable = pruned.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("bsz"))
-        .where(col("bsz") <= maxBucketSize)
-        .select("band", "bucket")
-      val cands = probe
-        .join(pruned.join(usable, Seq("band", "bucket"))
-          .select(col("band"), col("bucket"), col("id").as("corpus_id")),
-          Seq("band", "bucket"))
-        .select("batch_id", "corpus_id").dropDuplicates("batch_id", "corpus_id")
-      cands
-        .join(batchSets.select(col("id").as("batch_id"), col("sh").as("sh_b")), Seq("batch_id"))
-        .join(store.shingleSets.select(col("id").as("corpus_id"), col("sh").as("sh_c")),
-          Seq("corpus_id"))
-        .withColumn("jaccard", Shingling.jaccard(col("sh_b"), col("sh_c")))
-        .where(col("jaccard") >= threshold)
-        .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+      cappedCandidates(probe, prunedBandPostings(store, bucketList(probe, "pbucket")),
+        Seq("band", "bucket"), maxBucketSize)
     }
-  }
 
   /** Per-batch-doc ingestion decision over [[probeExact]]: every
     * non-null-text batch row with its corpus near-dup count, best match

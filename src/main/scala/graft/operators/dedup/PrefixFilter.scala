@@ -27,6 +27,42 @@ import org.apache.spark.sql.functions._
   */
 object PrefixFilter {
 
+  /** (id, n, s): each doc's distinct shingle hashes, one row per shingle,
+    * with the set size `n` riding the explode (one map-side size()) — a
+    * count window over the exploded corpus would re-sort for nothing.
+    * Fanned out before shingling: with a single-split input the persisted
+    * explode would inherit ONE partition, and every consumer (df agg,
+    * per-doc window, both self-join sides) would run as a 1-task stage.
+    */
+  private def exploded(df: DataFrame, idCol: String, textCol: String, shingle: Int): DataFrame =
+    graft.operators.FanOut.byKey(
+      df.where(col(textCol).isNotNull)
+        .select(col(idCol).as("id"), col(textCol)), col("id"))
+      .select(col("id"),
+        array_distinct(Shingling.shingleHashes(col(textCol), shingle)).as("__sh"))
+      .select(col("id"), size(col("__sh")).as("n"), explode(col("__sh")).as("s"))
+
+  /** The prefix rows (s, id): each doc's first n - ceil(tau·n) + 1
+    * shingles in the global rarest-first order (df ASC, then shingle).
+    *
+    * The ceil argument is deflated by a relative 1e-12 so an IEEE product
+    * that lands a few ulps ABOVE an exact integer k cannot round the ceil
+    * up to k+1 and shorten the prefix (530 (tau, n) pairs under n=200
+    * overshoot the exact bound otherwise — a shorter prefix breaks the
+    * completeness theorem). Deflating can only LENGTHEN the prefix by one:
+    * extra candidates, never a lost pair, and the exact verify keeps the
+    * output identical.
+    */
+  private def prefix(rows: DataFrame, tau: Double): DataFrame = {
+    val dfreq = rows.groupBy("s").agg(count(lit(1)).as("df"))
+    val alpha = ceil(col("n").cast("double") * lit(tau) * lit(1.0 - 1e-12))
+    rows.join(dfreq, Seq("s"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("id").orderBy(col("df"), col("s"))))
+      .where(col("rn") <= col("n") - alpha + lit(1))
+      .select(col("s"), col("id"))
+  }
+
   /** All pairs (id_a < id_b) with distinct-shingle Jaccard >= tau,
     * complete and exact.
     */
@@ -37,40 +73,10 @@ object PrefixFilter {
       tau: Double,
       shingle: Int = 3): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0,1], got $tau")
-    // set size rides the explode (one map-side size()) — a second
-    // count-window over the exploded corpus would re-sort for nothing.
-    // Fan out before shingling: with a single-split input the persisted
-    // exploded set inherited ONE partition and every consumer (df agg,
-    // per-doc window, both self-join sides) ran as back-to-back 1-task
-    // stages (~0.66 s each, measured — r16-opt, ProfileStages).
-    val exploded0 = graft.operators.FanOut.byKey(
-      df.where(col(textCol).isNotNull)
-        .select(col(idCol).as("id"), col(textCol)), col("id"))
-      .select(col("id"),
-        array_distinct(Shingling.shingleHashes(col(textCol), shingle)).as("__sh"))
-      .select(col("id"), size(col("__sh")).as("n"), explode(col("__sh")).as("s"))
-    val pairs = CacheScope.withPersisted(exploded0) { exploded =>
-      val dfreq = exploded.groupBy("s").agg(count(lit(1)).as("df"))
-      val sized = exploded.join(dfreq, Seq("s"))
-      // prefix length n - ceil(tau*n) + 1, rarest-first global order.
-      // The ceil argument is deflated by a relative 1e-12 so an IEEE
-      // product that lands a few ulps ABOVE an exact integer k cannot
-      // round the ceil up to k+1 and shorten the prefix (verified: 530
-      // (tau, n) pairs under n=200 overshoot the exact bound otherwise —
-      // a shorter prefix breaks the completeness theorem). Deflating can
-      // only LENGTHEN the prefix by one: extra candidates, never a lost
-      // pair, and the exact verify keeps the output identical.
-      val alpha = ceil(col("n").cast("double") * lit(tau) * lit(1.0 - 1e-12))
-      val prefix = sized
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("id").orderBy(col("df"), col("s"))))
-        .where(col("rn") <= col("n") - alpha + lit(1))
-        .select(col("s"), col("id"))
-      prefix.select(col("s"), col("id").as("id_a"))
-        .join(prefix.select(col("s"), col("id").as("id_b")), Seq("s"))
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"))
-        .dropDuplicates("id_a", "id_b")
+    // no frequency cap: the prefix bounds the candidates, so only the
+    // uncapped self-join half of the pair core runs
+    val pairs = CacheScope.withPersisted(exploded(df, idCol, textCol, shingle)) { e =>
+      BucketPairs.selfJoin(prefix(e, tau), Seq("s"))
     }
     Shingling.verifyJaccard(pairs, df, idCol, textCol, shingle)
       .where(col("jaccard") >= tau)
@@ -86,24 +92,8 @@ object PrefixFilter {
       textCol: String,
       tau: Double,
       shingle: Int = 3): (Long, Long) = {
-    val exploded = df
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        array_distinct(Shingling.shingleHashes(col(textCol), shingle)).as("__sh"))
-      .select(col("id"), size(col("__sh")).as("n"), explode(col("__sh")).as("s"))
-      .localCheckpoint(true)
-    def pairsOf(p: DataFrame): Long = p.select(col("s"), col("id").as("id_a"))
-      .join(p.select(col("s"), col("id").as("id_b")), Seq("s"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct().count()
-    val dfreq = exploded.groupBy("s").agg(count(lit(1)).as("df"))
-    val prefix = exploded
-      .join(dfreq, Seq("s"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("df"), col("s"))))
-      .where(col("rn") <=
-        col("n") - ceil(col("n").cast("double") * lit(tau) * lit(1.0 - 1e-12)) + lit(1))
-      .select(col("s"), col("id"))
-    (pairsOf(prefix), pairsOf(exploded))
+    val e = exploded(df, idCol, textCol, shingle).localCheckpoint(true)
+    def pairsOf(rows: DataFrame): Long = BucketPairs.selfJoin(rows, Seq("s")).count()
+    (pairsOf(prefix(e, tau)), pairsOf(e))
   }
 }

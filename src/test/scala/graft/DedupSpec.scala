@@ -165,6 +165,60 @@ class DedupSpec extends SparkSpecBase {
     val afterNgram = persisted -- before2
     assert(afterNgram.size <= 2,
       s"ngram retained ${afterNgram.size} persisted RDDs — corpus-scale cache leaked")
+    // every other caller of the bucket-pair core and the probe verify
+    // keeps the same bound; the store's own shingle-set persist predates
+    // the probe calls and is released at the end
+    val store = MinHashIndex.build(docs.where(col("doc_id") % 10 =!= 0), "doc_id", "text")
+    val batch = docs.where(col("doc_id") % 10 === 0)
+    for ((name, call) <- Seq[(String, () => Unit)](
+        "simhash" -> (() => SimHashDedup.candidatePairs(docs, "doc_id", "text")),
+        "prefix filter" -> (() => PrefixFilter.duplicatePairs(docs, "doc_id", "text", 0.5)),
+        "containment" -> (() => NGramJaccardDedup.containmentPairs(docs, "doc_id", "text")),
+        "probeExact" -> (() => MinHashIndex.probeExact(store, batch, "doc_id", "text", 0.5)),
+        "probeBanded" -> (() => MinHashIndex.probeBanded(store, batch, "doc_id", "text", 0.5)))) {
+      val b = persisted
+      call()
+      val retained = persisted -- b
+      assert(retained.size <= 2,
+        s"$name retained ${retained.size} persisted RDDs — corpus-scale cache leaked")
+    }
+    store.shingleSets.unpersist(false)
+  }
+
+  // --- skew guard boundary: a key with exactly max members still pairs,
+  // one with max + 1 members yields nothing. Each group repeats one text
+  // over its own vocabulary, so its members share every key and no key
+  // with the other group.
+
+  private def copies(text: String, ids: Seq[Long]) = ids.map(i => (i, text))
+  private def wordsText(tag: String) = (1 to 12).map(i => s"zk${tag}w$i").mkString(" ")
+  private def pairsOf(ids: Seq[Long]) =
+    (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+
+  test("skew guard boundary: minhash buckets of max members pair, max + 1 yield none") {
+    // identical texts collide in all 16 bands, so every band bucket of a
+    // group holds exactly the group's size
+    val corpus = (copies(wordsText("a"), 1L to 3L) ++ copies(wordsText("b"), 11L to 14L))
+      .toDF("doc_id", "text")
+    val got = MinHashDedup.candidatePairs(corpus, "doc_id", "text", maxBucketSize = 3)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got == pairsOf(1L to 3L), got)
+  }
+
+  test("skew guard boundary: hamming chunks of max members pair, max + 1 yield none") {
+    val sigs = (Seq.fill(3)(0x1111222233334444L).zip(1L to 3L) ++
+      Seq.fill(4)(0x5555666677778888L).zip(11L to 14L)).map(_.swap).toDF("id", "h")
+    val got = HammingDedup.candidatePairs(sigs, "id", "h", maxBucketSize = 3)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
+    assert(got == pairsOf(1L to 3L).map { case (a, b) => (a, b, 0) }, got)
+  }
+
+  test("skew guard boundary: shingles of maxShingleFreq docs pair, one more yields none") {
+    val corpus = (copies(wordsText("c"), 1L to 3L) ++ copies(wordsText("d"), 11L to 14L))
+      .toDF("doc_id", "text")
+    val got = NGramJaccardDedup.containmentPairs(corpus, "doc_id", "text", maxShingleFreq = 3)
+      .as[(Long, Long, Double, Double, Double)].collect().toSet
+    assert(got == pairsOf(1L to 3L).map { case (a, b) => (a, b, 1.0, 1.0, 1.0) }, got)
   }
 
   test("embedding dedup finds the planted near-identical vector") {

@@ -89,6 +89,21 @@ class MinHashIndexSpec extends SparkSpecBase {
     assert("PartitionFilters: \\[[^\\]]*pbucket".r.findFirstIn(bnPlan).nonEmpty, bnPlan.take(2000))
   }
 
+  test("skew guard boundary: corpus band buckets of max members match, max + 1 do not") {
+    // identical texts collide in all 16 bands: every corpus bucket of a
+    // group holds exactly the group's size (batch rows are not counted)
+    val a = (1 to 12).map(i => s"zqcapaw$i").mkString(" ")
+    val b = (1 to 12).map(i => s"zqcapbw$i").mkString(" ")
+    val corpus = ((1L to 3L).map(i => (i, a)) ++ (11L to 14L).map(i => (i, b)))
+      .toDF("doc_id", "text")
+    val batch = Seq((101L, a), (102L, b)).toDF("doc_id", "text")
+    val store = MinHashIndex.build(corpus, "doc_id", "text", nBuckets = 4)
+    val got = MinHashIndex.probeBanded(store, batch, "doc_id", "text", 0.5, maxBucketSize = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    store.shingleSets.unpersist(false)
+    assert(got == (1L to 3L).map(c => (101L, c, 1.0)).toSet, got)
+  }
+
   test("planted cross-batch near-dups found at analytic Jaccard; far pairs excluded") {
     // corpus carries the originals, the arriving batch the twins:
     //  near  m=40 t=38 => J = 36/40 = 0.9   (found by both probes)
