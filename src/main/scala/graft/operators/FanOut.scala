@@ -6,16 +6,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * §2.5 "input skew: one huge unsplittable file … repartition immediately
   * after the read", §2.6 stragglers).
   *
-  * The failure mode this fixes (measured, r16 optimization round): a
-  * snapshot table is a single parquet file with one row group, so its
-  * scan is ONE task no matter the core count — and any expensive
-  * generator fused into that scan (md5 resample weights, shingling,
-  * span/window explodes) runs on one core while the rest of the box
-  * idles. Worse, a `CacheScope.withPersisted` intermediate derived from
-  * that scan inherits the single partition, so EVERY downstream consumer
-  * stage of the cache is serial too (q_dedup_prefix_filter's four
-  * back-to-back 1-task 0.66 s stages; q_bootstrap_ci's 6.5 s of 7.3 s in
-  * one task — ProfileStages, OPTIMIZATION_r16.md).
+  * The failure mode this fixes: a snapshot table is a single parquet
+  * file with one row group, so its scan is ONE task no matter the core
+  * count — and any expensive generator fused into that scan (md5
+  * resample weights, shingling, span/window explodes) runs on one core
+  * while the rest of the box idles. Worse, an intermediate persisted
+  * from that scan (PrefixFilter's exploded shingles, the bootstrap
+  * resample) inherits the single partition, so EVERY downstream
+  * consumer stage of the cache is serial too.
   *
   * `byKey` hash-repartitions the slim pre-amplification projection to the
   * session default parallelism — but ONLY when the plan's current
@@ -29,7 +27,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Conf: `spark.graft.fanout.partitions` — empty (default) derives the
   * target from `sparkContext.defaultParallelism`; an explicit int pins
-  * it; `0` or `1` disables fan-out entirely (the pre-r16 shapes).
+  * it; `0` or `1` disables fan-out entirely.
   */
 private[graft] object FanOut {
 
@@ -48,9 +46,8 @@ private[graft] object FanOut {
     * Call-site discipline: hand this SCAN-LEVEL projections only
     * (scan/filter/project). The gate physically plans `df` (`.rdd`), and
     * a subtree containing a join would both double-plan and pre-trigger
-    * its broadcast jobs — measured as a net regression when the fan-out
-    * sat above verifyJaccard's semi-join (r16-opt A/B). Fan out below
-    * the join instead.
+    * its broadcast jobs at build time, a net regression where it was
+    * tried above a candidate-doc join. Fan out below the join instead.
     */
   def byKey(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "FanOut.byKey needs at least one key column")
@@ -65,13 +62,13 @@ private[graft] object FanOut {
     * (optimization guide §2.5 / §3.3): `keys` must be the join's equi
     * key. A pair-generation self-join multiplies rows AFTER the
     * exchange, so AQE's bytes-based coalescing — which only sees the
-    * slim pre-join shuffle — systematically undersizes the stage
-    * (measured r16-opt: the co-occurrence pair join ran as a 1.6 s
-    * 3-task stage, the neighbor-overlap apex join as 2 tasks, on a
-    * 32-core box). An explicit `repartition(n, keys)` is never an EXTRA
-    * shuffle — the join requires this hash partitioning anyway and
-    * EnsureRequirements inserts nothing on top — it only pins the
-    * partition count AQE would otherwise shrink.
+    * slim pre-join shuffle — systematically undersizes the stage (the
+    * co-occurrence pair join and the neighbor-overlap apex join each
+    * ran as a 2–3 task stage on a 32-core box). An explicit
+    * `repartition(n, keys)` is never an EXTRA shuffle — the join
+    * requires this hash partitioning anyway and EnsureRequirements
+    * inserts nothing on top — it only pins the partition count AQE
+    * would otherwise shrink.
     *
     * Target = max(defaultParallelism | conf override,
     * spark.sql.shuffle.partitions): scale-adaptive, never below either
@@ -84,11 +81,10 @@ private[graft] object FanOut {
     *
     * Apply ONLY where A/B-measured as a win: every consumer of the
     * pinned layout pays per-task overhead per pass, so iterative or
-    * multi-stage readers can lose more than the fat stage saves —
-    * measured r16-opt: a WIN for the neighbor-Jaccard apex join (2.32
-    * vs 2.56 s), a WASH for BFS, a LOSS for pagerank (4.22 vs 3.88),
-    * triangles (2.16 vs 1.52) and assoc-rules (2.22 vs 1.89), all of
-    * which stay unpinned with the verdict documented in place.
+    * multi-stage readers can lose more than the fat stage saves: a win
+    * for the neighbor-Jaccard apex join, a wash for BFS, a loss for
+    * pagerank, triangles and assoc-rules, which stay unpinned with the
+    * reason documented in place.
     */
   def byJoinKey(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "FanOut.byJoinKey needs at least one key column")
@@ -109,13 +105,13 @@ private[graft] object FanOut {
   val SkewFactorConf = "spark.graft.fanout.skewFactor"
   val SkewFactorDefault = 4.0
 
-  /** [[byJoinKey]] behind a RUNTIME SKEW GATE (r17, VERDICT r16 item 2
-    * — the jaro ×8 lesson): pinning a pair-join's exchange forfeits
-    * AQE's skew-splitting on it, which is exactly wrong when one block
-    * dominates (measured r16: ~2× LOSS under copy-amplified hot
-    * blocks). One slim count-aggregation probe over the join-key table
-    * decides at runtime: with per-key counts c, a self-join's per-key
-    * pair work is ~c², so the pin goes ahead only when
+  /** [[byJoinKey]] behind a RUNTIME SKEW GATE: pinning a pair-join's
+    * exchange forfeits AQE's skew-splitting on it, which is exactly
+    * wrong when one block dominates (a ~2× loss for the jaro blocking
+    * join under copy-amplified hot blocks). One slim count-aggregation
+    * probe over the join-key table decides at runtime: with per-key
+    * counts c, a self-join's per-key pair work is ~c², so the pin goes
+    * ahead only when
     * `max(c)² ≤ skewFactor · Σc²/target` — the hottest key's pair work
     * cannot dominate an evenly-hashed partition by more than the
     * conf'd factor. Otherwise the frame is returned UNCHANGED and AQE
@@ -126,7 +122,7 @@ private[graft] object FanOut {
     * call-site discipline); at 100 TB the probe is a slim
     * count-distinct-grain aggregation, orders of magnitude below the
     * pair join it guards. `spark.graft.fanout.partitions=0/1` disables
-    * pin AND probe (the pre-r16 shape).
+    * pin AND probe.
     */
   def byJoinKeySkewGated(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "FanOut.byJoinKeySkewGated needs at least one key column")

@@ -1,26 +1,27 @@
 package graft.operators.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.GraftFunctions
 
-// Cache lifecycle (every persist() in this file goes through CacheScope):
-// corpus-scale intermediates (banded / exploded / candidate-shingle sets)
-// are persisted only for the duration of one operator call — the slim
-// result (candidate pairs) is materialized eagerly via localCheckpoint and
-// the intermediate's blocks are released before the operator returns, so a
-// long-lived interactive session issuing many dedup calls accumulates only
-// candidate-sized checkpoints, never corpus-sized caches (DedupSpec
-// asserts the release). The cluster-scale pipeline shape writes these
-// intermediates to storage instead of relying on executor caches at all.
+// Cache lifecycle: the near-dup pair sets built here (BucketPairs,
+// Shingling.withShingleSets) are lazy plans — building one runs no job
+// and persists nothing, and their work runs once, inside the caller's
+// action. Operators whose intermediates have several consumers across
+// actions (PrefixFilter, MinHashIndex probes, the multi-probe IVF
+// self-join) persist them only for the duration of one call through
+// CacheScope, so a long-lived interactive session issuing many dedup
+// calls accumulates only candidate-sized checkpoints, never
+// corpus-sized caches (DedupSpec asserts the release).
 
-/** Persist-for-the-call scope: `body` sees `intermediate` persisted (the
-  * banded/exploded sets all have two consumers — a skew-guard aggregate
-  * and a join-back — that must not recompute the corpus projection); the
-  * body's result is materialized eagerly (localCheckpoint — slim by
-  * construction: candidate pairs, not corpus rows) and the intermediate's
-  * blocks are released before returning, error or not.
+/** Persist-for-the-call scope: `body` sees `intermediate` persisted (for
+  * intermediates with several consumers that must not recompute the
+  * corpus projection); the body's result is materialized eagerly
+  * (localCheckpoint — slim by construction: candidate pairs, not corpus
+  * rows) and the intermediate's blocks are released before returning,
+  * error or not.
   */
 private[operators] object CacheScope {
   def withPersisted(intermediate: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
@@ -37,36 +38,36 @@ private[operators] object CacheScope {
   *    shares;
   *  - only keys with 2..`maxMembers` members produce pairs — a larger key
   *    (boilerplate shingles, degenerate buckets) yields none, which keeps
-  *    the quadratic self-join bounded per key;
+  *    the quadratic pair work bounded per key;
   *  - carried columns come back as `<c>_a` / `<c>_b`, and `score` runs on
-  *    the deduplicated pairs inside the scope;
-  *  - the result is pinned and the keyed rows' persist is released
-  *    before returning ([[CacheScope]]).
+  *    the deduplicated pairs.
+  *
+  * One lazy plan: the rows shuffle once on the key and sort by (key, id)
+  * within partitions; one linear scan per task then emits each key's
+  * pairs, buffering at most `maxMembers + 1` rows of a key (the
+  * `Quantiles.selectRanks` sort-and-scan idiom). Nothing is persisted,
+  * counted or joined back, and building the plan runs no job.
   */
 private[dedup] object BucketPairs {
   def apply(keyed: DataFrame, keys: Seq[String], maxMembers: Int, carry: Seq[String] = Nil,
-      score: DataFrame => DataFrame = identity): DataFrame =
-    // the keyed rows feed the key-size aggregate and the join-back.
-    // Aggregate + join instead of a window: no sort, and the filter
-    // shrinks the self-join input to the shared-key minority.
-    CacheScope.withPersisted(keyed) { rows =>
-      val usable = rows.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("bsz"))
-        .where(col("bsz") >= 2 && col("bsz") <= maxMembers)
-        .select(keys.map(col): _*)
-      score(selfJoin(rows.join(usable, keys), keys, carry))
-    }
-
-  /** The uncapped half: `id_a < id_b` pairs of `rows` sharing a key,
-    * deduplicated, neither persisted nor pinned.
-    */
-  def selfJoin(rows: DataFrame, keys: Seq[String], carry: Seq[String] = Nil): DataFrame = {
+      score: DataFrame => DataFrame = identity): DataFrame = {
     val cols = "id" +: carry
-    def side(s: String) = rows.select(keys.map(col) ++ cols.map(c => col(c).as(s"${c}_$s")): _*)
-    side("a").join(side("b"), keys)
-      .where(col("id_a") < col("id_b"))
-      .select(cols.flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
-      .dropDuplicates("id_a", "id_b")
+    // null keys never pair (the equi-join semantics of a key match)
+    val rows = keyed.where(keys.map(col(_).isNotNull).reduce(_ && _))
+    val at = cols.map(rows.schema.fieldIndex)
+    val out = StructType(cols.flatMap(c =>
+      Seq("a", "b").map(s => rows.schema(c).copy(name = s"${c}_$s"))))
+    val pairs = rows.groupBy(keys.map(col): _*)
+      .as(Encoders.row(StructType(keys.map(rows.schema(_)))), Encoders.row(rows.schema))
+      .flatMapSortedGroups(col("id")) { (_, members) =>
+        val kept = members.take(math.min(maxMembers.toLong + 1, Int.MaxValue).toInt).toVector
+        // pairs stream out one at a time; only the key's rows are held
+        if (kept.size > maxMembers) Iterator.empty
+        else kept.indices.iterator.flatMap(i => (i + 1 until kept.size).iterator.map(j =>
+          Row.fromSeq(at.flatMap(c => Seq(kept(i).get(c), kept(j).get(c))))))
+      }(Encoders.row(out))
+    // members sort by id, so the filter only drops equal and null ids
+    score(pairs.where(col("id_a") < col("id_b")).dropDuplicates("id_a", "id_b"))
   }
 }
 
@@ -191,26 +192,31 @@ private[graft] object Shingling {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
 
-  /** Candidate pairs with their distinct shingle-hash sets attached as
-    * `sh_a` / `sh_b`; `score` picks the output columns. Shingles are
-    * computed only for docs that appear in a pair (semi-join first) — at
-    * 100 TB the candidate set is orders of magnitude smaller than the
-    * corpus. The candidate shingle sets feed BOTH join sides, so they are
-    * persisted for the call and released once the scored pairs are
-    * materialized (CacheScope), never re-shingled once per side.
+  /** Candidate pairs `(id_a, id_b)` with their distinct shingle-hash
+    * sets attached as `sh_a` / `sh_b`; `score` picks the output columns.
+    * Shingles are computed only for docs that appear in a pair, once per
+    * doc — at 100 TB the candidate set is orders of magnitude smaller
+    * than the corpus.
+    *
+    * Lazy, and the pair set is read once: each pair is listed under both
+    * of its ids, each candidate doc is shingled once next to its list,
+    * and the pair's two ends meet again in one aggregate keyed by the
+    * pair. A plan that read the pairs once per join side would compute
+    * them once per side: the self-joined copy gets fresh attribute ids,
+    * so adaptive execution reuses none of its exchanges.
     */
   def withShingleSets(pairs: DataFrame, df: DataFrame, idCol: String, textCol: String, n: Int)(
       score: DataFrame => DataFrame): DataFrame = {
-    val candIds = pairs.select(col("id_a").as("id"))
-      .unionAll(pairs.select(col("id_b").as("id"))).distinct()
-    val sh0 = df.select(col(idCol).as("id"), col(textCol))
-      .join(candIds, Seq("id"), "left_semi")
-      .select(col("id"), array_distinct(shingleHashes(col(textCol), n)).as("sh"))
-    CacheScope.withPersisted(sh0) { sh =>
-      score(pairs
-        .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b")))
-    }
+    val ends = pairs.select(explode(array(col("id_a"), col("id_b"))).as("id"), struct("id_a", "id_b").as("p"))
+      .groupBy("id").agg(collect_list(col("p")).as("ps"))
+    val shingled = df.select(col(idCol).as("id"), col(textCol)).join(ends, Seq("id"))
+      .select(col("id"), array_distinct(shingleHashes(col(textCol), n)).as("sh"), explode(col("ps")).as("p"))
+    // every shingle set of a side's id: a repeated input id pairs each
+    // of its rows, as a join on the id would
+    def side(s: String) = filter(col("sets"), _("id") === col(s"id_$s"))("sh")
+    score(shingled.groupBy("p.id_a", "p.id_b").agg(collect_list(struct("id", "sh")).as("sets"))
+      .select(col("id_a"), col("id_b"), explode(side("a")).as("sh_a"), side("b").as("bs"))
+      .select(col("id_a"), col("id_b"), col("sh_a"), explode(col("bs")).as("sh_b")))
   }
 
   /** Exact Jaccard over distinct shingle-hash sets, attached to candidate
@@ -257,7 +263,10 @@ object MinHashDedup {
     else GraftFunctions.bandBuckets(signature(textCol, shingle))
 
   /** Candidate pairs (id_a < id_b) from banded LSH buckets, with exact
-    * Jaccard over shingle sets attached.
+    * Jaccard over shingle sets attached. Building the plan runs no job
+    * when `df` is a scan or cached projection; over an uncached shuffle
+    * output the fan-out's partition-count check runs that shuffle at
+    * build time ([[graft.operators.FanOut]]).
     */
   def candidatePairs(
       df: DataFrame,
@@ -267,26 +276,30 @@ object MinHashDedup {
       maxBucketSize: Int = 1000): DataFrame = {
     // Banded rows stay slim — (id, band, bucket) only. Shingle sets are
     // re-attached after pair dedup; shuffling ~150-string arrays through
-    // the band explode dominates runtime otherwise. Not fanned out: the
-    // fused native banding is cheap per row and the pair core re-keys by
-    // (band, bucket), so an id-keyed exchange buys no downstream
-    // partitioning (unlike PrefixFilter, whose per-doc window reuses it).
-    val banded = df
-      .select(col(idCol).as("id"), bandColumn(col(textCol), shingle).as("bs"))
-      .select(col("id"), posexplode(col("bs")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
+    // the band explode dominates runtime otherwise. Only the banding is
+    // fanned out: it is the largest cost of the pair set and would run as
+    // one task on a single-split input, while the shingle attach shuffles
+    // on the id anyway (and a second read of the fan-out would run its
+    // exchange twice: AQE reuses no exchange of a re-read copy).
+    val docs = df.select(col(idCol).as("id"), col(textCol))
+    val banded = graft.operators.FanOut.byKey(docs, col("id"))
+      .select(col("id"), posexplode(bandColumn(col(textCol), shingle)).as(Seq("band", "bucket")))
     Shingling.verifyJaccard(BucketPairs(banded, Seq("band", "bucket"), maxBucketSize),
-      df, idCol, textCol, shingle)
+      docs, "id", textCol, shingle)
   }
 
   def duplicatePairs(df: DataFrame, idCol: String, textCol: String, threshold: Double = 0.5): DataFrame =
     candidatePairs(df, idCol, textCol).where(col("jaccard") >= threshold)
 
-  /** Keep-first survivors: drop any doc near-matching a lower-id doc. */
+  /** Keep-first survivors: drop any doc near-matching a lower-id doc.
+    * Builds with no job on the inputs [[candidatePairs]] names.
+    */
   def dedupe(df: DataFrame, idCol: String, textCol: String, threshold: Double = 0.5): DataFrame = {
     val losers = duplicatePairs(df, idCol, textCol, threshold).select(col("id_b").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+    // a shuffled join whatever the lazy losers' size estimate, so the
+    // survivors spread over the shuffle partitions instead of inheriting
+    // a single-partition input's layout
+    df.join(losers.hint("shuffle_hash"), Seq(idCol), "left_anti")
   }
 }
 
@@ -295,9 +308,6 @@ object MinHashDedup {
   * shares at least one exact chunk), popcount verify on candidates.
   */
 object SimHashDedup {
-  val Chunks = 4
-  val ChunkBits = 16
-
   def signature(textCol: Column): Column =
     GraftFunctions.simhash(split(lower(textCol), " "))
 
@@ -430,12 +440,9 @@ object NGramJaccardDedup {
 
   /** Per-doc candidate stats (total, always one row per doc). */
   def stats(df: DataFrame, idCol: String, textCol: String, shingle: Int = 5): DataFrame = {
-    // candidatePairs already returns an eagerly-materialized checkpoint
-    // (CacheScope), so the three consumers below reuse it directly
-    val pairs = candidatePairs(df, idCol, textCol, shingle)
-    val perDoc = pairs
-      .select(col("id_a").as("id"), col("jaccard"))
-      .unionAll(pairs.select(col("id_b").as("id"), col("jaccard")))
+    // one read of the lazy pair set: each pair counts for both its ids
+    val perDoc = candidatePairs(df, idCol, textCol, shingle)
+      .select(explode(array(col("id_a"), col("id_b"))).as("id"), col("jaccard"))
       .groupBy("id")
       .agg(count(lit(1)).as("n_candidates"), max(col("jaccard")).as("max_jaccard"))
     df.select(col(idCol).as("id"))

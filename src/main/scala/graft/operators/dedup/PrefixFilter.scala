@@ -63,6 +63,18 @@ object PrefixFilter {
       .select(col("s"), col("id"))
   }
 
+  /** `id_a < id_b` pairs of rows sharing a shingle, deduplicated and
+    * uncapped (the prefix bounds the candidates). The merge hint fixes
+    * the join strategy: without it adaptive execution picks sort-merge
+    * or broadcast, either build side, from whichever input stage
+    * finished first, so two runs planned the same join differently.
+    */
+  private def selfJoin(rows: DataFrame): DataFrame =
+    rows.select(col("s"), col("id").as("id_a")).hint("merge")
+      .join(rows.select(col("s"), col("id").as("id_b")), Seq("s"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+
   /** All pairs (id_a < id_b) with distinct-shingle Jaccard >= tau,
     * complete and exact.
     */
@@ -73,10 +85,9 @@ object PrefixFilter {
       tau: Double,
       shingle: Int = 3): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0,1], got $tau")
-    // no frequency cap: the prefix bounds the candidates, so only the
-    // uncapped self-join half of the pair core runs
+    // no frequency cap: the prefix bounds the candidates
     val pairs = CacheScope.withPersisted(exploded(df, idCol, textCol, shingle)) { e =>
-      BucketPairs.selfJoin(prefix(e, tau), Seq("s"))
+      selfJoin(prefix(e, tau))
     }
     Shingling.verifyJaccard(pairs, df, idCol, textCol, shingle)
       .where(col("jaccard") >= tau)
@@ -93,7 +104,6 @@ object PrefixFilter {
       tau: Double,
       shingle: Int = 3): (Long, Long) = {
     val e = exploded(df, idCol, textCol, shingle).localCheckpoint(true)
-    def pairsOf(rows: DataFrame): Long = BucketPairs.selfJoin(rows, Seq("s")).count()
-    (pairsOf(prefix(e, tau)), pairsOf(e))
+    (selfJoin(prefix(e, tau)).count(), selfJoin(e).count())
   }
 }

@@ -221,6 +221,85 @@ class DedupSpec extends SparkSpecBase {
     assert(got == pairsOf(1L to 3L).map { case (a, b) => (a, b, 1.0, 1.0, 1.0) }, got)
   }
 
+  test("near-dup operators build lazily: no job, no persisted RDD") {
+    import org.apache.spark.grafttest.Bus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = graft.sources.Snapshot(spark, sf()).documents
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    for ((name, build) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "MinHashDedup.dedupe" -> (() => MinHashDedup.dedupe(docs, "doc_id", "text")),
+        "SimHashDedup.dedupe" -> (() => SimHashDedup.dedupe(docs, "doc_id", "text")),
+        "NGramJaccardDedup.candidatePairs" ->
+          (() => NGramJaccardDedup.candidatePairs(docs, "doc_id", "text")),
+        "NGramJaccardDedup.containmentPairs" ->
+          (() => NGramJaccardDedup.containmentPairs(docs, "doc_id", "text")))) {
+      val persisted = sc.getPersistentRDDs.keySet
+      Bus.drain(sc)
+      jobs.set(0)
+      sc.addSparkListener(listener)
+      try { build(); Bus.drain(sc) }
+      finally sc.removeSparkListener(listener)
+      assert(jobs.get == 0, s"$name submitted ${jobs.get} Spark jobs while building")
+      val added = sc.getPersistentRDDs.keySet -- persisted
+      assert(added.isEmpty, s"$name persisted ${added.size} RDDs while building")
+    }
+  }
+
+  test("pair core: hamming pairs equal a brute-force reference under the member cap") {
+    // 40 ids, four 16-bit chunks each. Per band the ids fall into groups
+    // of 1, 2, max and max + 1 members, one chunk value per group. Bands
+    // 0 and 1 share one grouping, so their pairs share two keys; bands 2
+    // and 3 are shuffled independently.
+    val max = 4
+    val rnd = new scala.util.Random(20261019L)
+    val ids = (1L to 40L).toVector
+    val sizes = Seq.fill(3)(Seq(1, 2, max, max + 1)).flatten :+ max
+    def grouping(): Seq[Vector[Long]] = {
+      val shuffled = rnd.shuffle(ids)
+      sizes.scanLeft(0)(_ + _).sliding(2).map { case Seq(a, b) => shuffled.slice(a, b) }.toSeq
+    }
+    val g01 = grouping()
+    val groupings = Seq(g01, g01, grouping(), grouping())
+    val chunk: Map[(Int, Long), Long] = groupings.zipWithIndex.flatMap { case (gs, band) =>
+      val values = rnd.shuffle((0L until 0x10000L).toVector).take(gs.size)
+      gs.zip(values).flatMap { case (g, v) => g.map(id => (band, id) -> v) }
+    }.toMap
+    val sig = ids.map(id => id -> (0 until 4).map(b => chunk((b, id)) << (16 * b)).reduce(_ | _)).toMap
+    val perKey = groupings.flatMap(_.filter(g => g.size >= 2 && g.size <= max))
+      .flatMap(g => for (a <- g; b <- g if a < b) yield (a, b))
+    val want = perKey.distinct
+      .map { case (a, b) => (a, b, java.lang.Long.bitCount(sig(a) ^ sig(b))) }.sorted
+    assert(groupings.forall(_.map(_.size).toSet == Set(1, 2, max, max + 1)))
+    assert(perKey.size > want.size, "plant broken: no pair shares two keys")
+    val got = HammingDedup.candidatePairs(sig.toSeq.toDF("id", "h"), "id", "h", maxBucketSize = max)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSeq.sorted
+    assert(got == want, s"missing ${want.diff(got)} extra ${got.diff(want)}")
+  }
+
+  test("skew guard: an Int.MaxValue member cap pairs every key") {
+    val sigs = (Seq.fill(3)(0x1111222233334444L).zip(1L to 3L) ++
+      Seq.fill(4)(0x5555666677778888L).zip(11L to 14L)).map(_.swap).toDF("id", "h")
+    val got = HammingDedup.candidatePairs(sigs, "id", "h", maxBucketSize = Int.MaxValue)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got == pairsOf(1L to 3L) ++ pairsOf(11L to 14L), got)
+  }
+
+  test("shingle attach: a repeated id pairs each of its rows, as a join on the id") {
+    // id 2 has a copy of doc 1 and an unrelated text: the pair (1, 2) is
+    // scored once per row of id 2
+    val corpus = Seq((1L, wordsText("e")), (2L, wordsText("e")), (2L, wordsText("f")))
+      .toDF("doc_id", "text")
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSeq.sorted
+    val want = Seq((1L, 2L, 0.0), (1L, 2L, 1.0))
+    assert(scores(MinHashDedup.candidatePairs(corpus, "doc_id", "text")) == want)
+    assert(scores(NGramJaccardDedup.containmentPairs(corpus, "doc_id", "text")) == want)
+  }
+
   test("embedding dedup finds the planted near-identical vector") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),

@@ -370,6 +370,32 @@ class PlanSpec extends SparkSpecBase {
     assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1, p.take(3000))
   }
 
+  test("prefix filter: the pair self-join plans with one strategy in every run") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the (s, id_a) x (s, id_b) self-join runs inside the pair set's
+    // build-time pin, so every execution of both runs is audited; an
+    // unhinted join here was sort-merge in one run and broadcast in
+    // another, after whichever input stage finished first
+    val helper = new AdaptiveSparkPlanHelper {}
+    val strategies = (1 to 2).flatMap { _ =>
+      val (df, captured) = org.apache.spark.grafttest.Bus.capture(spark) {
+        val q = SparkEntry.queries("q_dedup_prefix_filter")(spark, sf())
+        q.collect()
+        q
+      }
+      (captured :+ df.queryExecution).distinct.flatMap { qe =>
+        helper.collectWithSubqueries(qe.executedPlan) {
+          case j: BaseJoinExec
+              if j.leftKeys.collect { case a: Attribute => a.name } == Seq("s") &&
+                j.output.exists(_.name == "id_a") => j.nodeName
+        }
+      }
+    }
+    assert(strategies.size == 2 && strategies.distinct == Seq("SortMergeJoin"), strategies)
+  }
+
   test("partitioned writes enable partition pruning at the scan") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toFile
